@@ -38,25 +38,19 @@ import org.apache.spark.sql.SparkSession
   * headline.
   */
 object Bench {
-  /** Queries that drain a Structured Streaming pipeline in-query. Each
-    * pays a fixed per-drain "admission floor" (stream init, offset/commit
-    * log, state-store instantiation, sink commit) on top of the data
-    * work; the bench reports the floor separately so a real regression in
-    * these queries isn't masked by (or mistaken for) fixture cost. */
-  val StreamingQueries: Set[String] = Set(
-    "q_log_stream", "q_sessionize_custom", "q_timed_sessions",
-    "q_stream_static_join",
-    "q_streaming_cdc", "q_streaming_window", "q_streaming_sink",
-    "q_streaming_chunk", "q_streaming_join", "q_streaming_full_join",
-    "q_streaming_left_join", "q_streaming_hll", "q_streaming_heavy_hitters",
-    "q_streaming_dedup", "q_streaming_c4", "q_streaming_neardedup",
-    "q_streaming_classify",
-    // transformWithState surface — these REQUIRE the RocksDB store, whose
-    // open/close dominates their floor
-    "q_transform_state", "q_map_state", "q_list_state")
+  /** Queries that drain a Structured Streaming pipeline in-query (their
+    * catalog `drain` is not `Drain.None`). Each pays a fixed per-drain
+    * "admission floor" (stream init, offset/commit log, state-store
+    * instantiation, sink commit) on top of the data work; the bench reports
+    * the floor separately so a real regression in these queries isn't
+    * masked by (or mistaken for) fixture cost. */
+  val StreamingQueries: Set[String] =
+    SparkEntry.catalog.filter(_.drain != Drain.None).map(_.name).toSet
 
+  /** The transformWithState drains: they REQUIRE the RocksDB store, whose
+    * open/close dominates their floor. */
   private val RocksDbQueries: Set[String] =
-    Set("q_transform_state", "q_map_state", "q_list_state", "q_timed_sessions")
+    SparkEntry.catalog.filter(_.drain == Drain.RocksDb).map(_.name).toSet
 
   /** Measure the per-drain admission floor: a 2-row file stream drained
     * through a fresh checkpoint with Trigger.AvailableNow into the noop
@@ -67,16 +61,7 @@ object Bench {
     */
   def measureFloor(spark: SparkSession, stateful: Boolean, runs: Int = 3): Double = {
     import org.apache.spark.sql.streaming.Trigger
-    // same provider settings as the transformWithState queries (incl.
-    // changelog checkpointing — SparkEntry.withRocksDbStateStore), or the
-    // floor/work split misattributes the config difference
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    val prevs = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    if (stateful) confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    def drains(): Double =
       (0 until runs).map { _ =>
         // same checkpoint placement as the drains (Scratch.ephemeralCkptDir):
         // floor and queries must pay the same fixed costs or the floor/work
@@ -101,10 +86,10 @@ object Bench {
         deleteRec(base.toFile)
         dt
       }.min
-    } finally prevs.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    // the stateful floor runs on the RocksDB drains' own store settings,
+    // or the floor/work split misattributes the config difference
+    if (stateful) catalog.QuerySupport.withRocksDbStateStore(spark)(drains())
+    else drains()
   }
 
   private def deleteRec(f: java.io.File): Unit = {
@@ -167,16 +152,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadAvg()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // bench the session users get
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession() // bench the session users get
     // JVM/session warmup outside the timed region (JIT, codegen cache,
     // filesystem metadata) so per-query numbers measure the queries; a
     // missing warmup dataset must not abort the benchmark of sfDir

@@ -1,7 +1,6 @@
 package graft.dev
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB time attribution for one declared query — the "where do the
   * seconds go" probe the optimization round needs before touching an
@@ -17,15 +16,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val (sfDir, qname) = (args(0), args(1))
     val n = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.HarnessSession()
 
     final case class Job(id: Int, desc: String, start: Long,
         var end: Long = -1L, var tasks: Int = 0, var stages: Int = 0)
@@ -72,7 +63,7 @@ object JobProfile {
       // the listener bus is asynchronous: trailing onJobEnd/onStageCompleted
       // events may still be in flight when count() returns — poll until
       // every recorded job has an end time (short timeout) before
-      // snapshotting, or jobs print with duration -1 (ADVICE r16)
+      // snapshotting, or jobs print without a duration (ADVICE r16)
       val deadline = System.nanoTime() + 2000000000L
       while (jobs.synchronized(jobs.exists(_.end < 0)) &&
           System.nanoTime() < deadline) Thread.sleep(20)
@@ -81,10 +72,15 @@ object JobProfile {
       println(f"== $qname round $round: total $dt%.3f s, rows=$rows, jobs=${snap.size}")
       var covered = 0.0
       snap.foreach { j =>
-        val d = if (j.end > 0) (j.end - j.start) / 1e9 else -1.0
-        if (d > 0) covered += d
+        // a job still unended after the drain poll has no duration to print
+        val dur =
+          if (j.end > 0) {
+            val d = (j.end - j.start) / 1e9
+            covered += d
+            f"$d%7.3f s"
+          } else "n/a (listener drain timeout)"
         val desc = if (j.desc.length > 90) j.desc.take(90) + "…" else j.desc
-        println(f"  job ${j.id}%4d  ${d}%7.3f s  stages=${j.stages}%2d tasks=${j.tasks}%4d  $desc")
+        println(f"  job ${j.id}%4d  $dur  stages=${j.stages}%2d tasks=${j.tasks}%4d  $desc")
       }
       println(f"  sum(job durations) $covered%.3f s (gap to total = driver/planning time)")
     }

@@ -1,10 +1,34 @@
 package graft
 
-/** Smoke: every SparkEntry query runs at sf0.001 and yields rows; every
-  * oracle key refers to a real query. (Exact value parity vs DuckDB is the
-  * driver's t2 gate; cross-checked during development.)
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.scalatest.BeforeAndAfterAll
+
+/** Smoke: every SparkEntry query runs at sf0.001 and yields rows, and
+  * starts a streaming query exactly when its catalog entry declares a
+  * drain; every oracle key refers to a real query. (Exact value parity vs
+  * DuckDB is the driver's t2 gate; cross-checked during development.)
   */
-class QueriesSpec extends SparkSpec {
+class QueriesSpec extends SparkSpec with BeforeAndAfterAll {
+
+  // Streaming queries started on the shared session. The session posts
+  // QueryStartedEvent to its own listeners on the thread that calls
+  // start(), so the count is complete once a query body returns.
+  private val streamsStarted = new java.util.concurrent.atomic.AtomicInteger
+  private lazy val startCounter = {
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        streamsStarted.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(l)
+    l
+  }
+
+  override def afterAll(): Unit =
+    try spark.streams.removeListener(startCounter) finally super.afterAll()
+
+  private val drains = SparkEntry.catalog.map(q => q.name -> q.drain).toMap
 
   test("entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -17,8 +41,13 @@ class QueriesSpec extends SparkSpec {
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs and returns rows at sf0.001") {
+      startCounter
+      streamsStarted.set(0)
       val df = fn(spark, sf)
       assert(df.count() > 0, s"$name returned no rows")
+      // a wrong declaration would mis-split Bench's streaming floors
+      assert((streamsStarted.get > 0) == (drains(name) != Drain.None),
+        s"$name declares drain ${drains(name)} but started ${streamsStarted.get} streaming queries")
     }
   }
 

@@ -63,18 +63,13 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   /** Drain `srcDir` through a FIXED checkpoint under RocksDB + changelog
-    * checkpointing (the production configuration the transformWithState
-    * queries run with — SparkEntry.withRocksDbStateStore). Each call is
+    * checkpointing, through the same helper the transformWithState queries
+    * run under (catalog.QuerySupport.withRocksDbStateStore). Each call is
     * one "process lifetime": AvailableNow drains what is present, stops.
     */
   private def drainChangelog(
-      srcDir: String, ckpt: String): Set[(String, String, Long)] = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" -> RocksDb,
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      srcDir: String, ckpt: String): Set[(String, String, Long)] =
+    catalog.QuerySupport.withRocksDbStateStore(spark) {
       val out = collection.mutable.Set.empty[(String, String, Long)]
       val schema = spark.read.parquet(srcDir).schema
       val q = spark.readStream.schema(schema)
@@ -95,11 +90,7 @@ class RocksDbStateSpec extends SparkSpec {
         .start()
       assert(q.awaitTermination(120000), "drain timed out")
       out.toSet
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
-  }
 
   test("changelog checkpointing: open-window state survives a restart") {
     import spark.implicits._
