@@ -77,18 +77,21 @@ object Bench {
         val piped =
           if (stateful) in.groupBy("value").count()
           else in.select("value")
-        val q = piped.writeStream.format("noop")
-          .option("checkpointLocation", base.resolve("ckpt").toString)
-          .outputMode(if (stateful) "update" else "append")
-          .trigger(Trigger.AvailableNow()).start()
+        val q = catalog.QuerySupport.start(piped) {
+          _.format("noop")
+            .option("checkpointLocation", base.resolve("ckpt").toString)
+            .outputMode(if (stateful) "update" else "append")
+            .trigger(Trigger.AvailableNow())
+        }
         q.awaitTermination()
         val dt = (System.nanoTime() - t0) / 1e9
         deleteRec(base.toFile)
         dt
       }.min
-    // the stateful floor runs on the RocksDB drains' own store settings,
-    // or the floor/work split misattributes the config difference
-    if (stateful) catalog.QuerySupport.withRocksDbStateStore(spark)(drains())
+    // the stateful floor starts on the RocksDB drains' own store settings
+    // (pinned at start like theirs), or the floor/work split misattributes
+    // the config difference
+    if (stateful) catalog.QuerySupport.onRocksDbStateStore(drains())
     else drains()
   }
 

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The session the harness mains (`Bench`, `Verify`, `dev.JobProfile`,
-  * `dev.PlanDump`) run the catalog on: `local[SPARK_GRAFT_CPUS]` (default
-  * 4) with the [[GraftExtensions]] users get, one shuffle partition per
-  * core, UTC session time, no UI, WARN logging.
+  * `dev.DrainProfile`, `dev.PlanDump`) run the catalog on:
+  * `local[SPARK_GRAFT_CPUS]` (default 4) with the [[GraftExtensions]]
+  * users get, one shuffle partition per core, UTC session time, no UI,
+  * WARN logging.
   */
 private[graft] object HarnessSession {
   def apply(): SparkSession = {

@@ -17,7 +17,7 @@ object Drain {
   case object Stateless extends Drain
 
   /** Drains a transformWithState stream, which needs the RocksDB state
-    * store; the catalog runs the query body with that store swapped in.
+    * store; the catalog pins that store on the body's drains as they start.
     */
   case object RocksDb extends Drain
 }

@@ -168,7 +168,6 @@ private[graft] object DedupQueries extends QueryFamily {
          |SELECT c.lang, count(*) AS n_kept, CAST(sum(c.doc_id) AS BIGINT) AS id_sum
          |FROM kept JOIN corpus c USING (doc_id)
          |GROUP BY c.lang ORDER BY c.lang""".stripMargin, Drain.Stateless) { (spark, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val srcDir = nearDupStreamSrcDir(spark, dir)
     val key = tmpKey(dir)
     val sinkDir = s"/tmp/graft_stream_neardup_sink/$key"
@@ -177,22 +176,18 @@ private[graft] object DedupQueries extends QueryFamily {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1") // one source file per batch, in order
       .parquet(srcDir)
-    val ckpt = graft.Scratch.ephemeralCkptDir("graft_neardup_ckpt").toString
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // micro-batch-sized shuffle width (measured 6.86 -> 5.86 s,
-        // dev/DRAIN_PROFILE.md round-13): maxFilesPerTrigger=1 above
-        // bounds every batch to ONE source file, so the width tracks the
-        // batch, not the box — a deployment with bigger triggers sizes
-        // this (opt-in parameter) to its own batch volume
-        graft.streaming.StreamingNearDedup.dedupBatch(b, id, sinkDir, "doc_id", "text",
-          shufflePartitions = Some(8))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(300000)) q.stop()
-    deleteRec(new java.io.File(ckpt))
+    drain(stream, "q_streaming_neardedup") {
+      _.outputMode("append")
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+          // micro-batch-sized shuffle width (measured 6.86 -> 5.86 s,
+          // dev/DRAIN_PROFILE.md round-13): maxFilesPerTrigger=1 above
+          // bounds every batch to ONE source file, so the width tracks the
+          // batch, not the box — a deployment with bigger triggers sizes
+          // this (opt-in parameter) to its own batch volume
+          graft.streaming.StreamingNearDedup.dedupBatch(b, id, sinkDir, "doc_id", "text",
+            shufflePartitions = Some(8))
+        }
+    }
     readSinkOrEmpty(spark, sinkDir, "doc_id LONG, lang STRING, text STRING")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("id_sum"))

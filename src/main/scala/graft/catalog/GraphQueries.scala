@@ -1,7 +1,7 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -306,19 +306,22 @@ private[graft] object GraphQueries extends QueryFamily {
     // width; everything after it operates on the ε-graph of the DECLARED
     // ≤1000-point subset (hundreds of edges) — running its degree counts,
     // CC rounds, and labeling joins box-wide spends more on task launch
-    // than on data, so the tail is batch-sized like the streaming drains
-    // ([[withShufflePartitionsCap]] rationale; the CC rounds additionally
-    // self-size from their measured edge count)
-    val (coreLab, borderLab) = withShufflePartitionsCap(spark, 8) {
+    // than on data, so the tail is batch-sized like the streaming drains:
+    // it runs in a [[capped]] clone of the session, the checkpointed
+    // frames crossing in and out (the CC rounds additionally self-size
+    // from their measured edge count)
+    val (coreLab, borderLab) = {
+      val narrow = capped(spark, 8)
+      val undN = GraftSql.ofRows(narrow, und)
       // symmetric orientation in ONE explode pass, not a self-union that
       // re-reads the checkpoint twice
-      val adj = und.select(explode(array(
+      val adj = undN.select(explode(array(
           struct(col("ida").as("node"), col("idb").as("nb")),
           struct(col("idb").as("node"), col("ida").as("nb")))).as("p"))
         .select(col("p.node").as("node"), col("p.nb").as("nb"))
       val core = adj.groupBy("node").agg(count(lit(1)).as("nnb"))
         .filter(col("nnb") >= minNb).select("node")
-      val coreEdges = und
+      val coreEdges = undN
         .join(core.select(col("node").as("ida")), Seq("ida"))
         .join(core.select(col("node").as("idb")), Seq("idb"))
       val comp = graft.ops.DupGroups.connectedComponents(coreEdges, "ida", "idb")
@@ -332,7 +335,7 @@ private[graft] object GraphQueries extends QueryFamily {
         .join(core, Seq("node"), "left_anti")
         .groupBy("node").agg(min("cluster").as("cluster"))
         .localCheckpoint(true)
-      (coreLab, borderLab)
+      (GraftSql.ofRows(spark, coreLab), GraftSql.ofRows(spark, borderLab))
     }
     val clusters = coreLab.groupBy("cluster").agg(count(lit(1)).as("n_core"))
       .join(borderLab.groupBy("cluster").agg(count(lit(1)).as("n_border")),

@@ -279,7 +279,6 @@ private[graft] object LogSourceQueries extends QueryFamily {
   query("q_log_stream",
       """SELECT event_type, count(*) AS n, CAST(sum(user_id) AS BIGINT) AS sum_users
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin, Drain.Stateless) { (spark, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     // 16 files + maxFilesPerTrigger=8 -> the drain really runs >1 batch
     val path = logDir(spark, dir, "plain_many")
     val stream = spark.readStream.format("log")
@@ -295,20 +294,13 @@ private[graft] object LogSourceQueries extends QueryFamily {
     // over different dirs (parallel bench/test runs in one session) must not
     // collide on a duplicate active query name / shared complete-mode table.
     val sinkName = "graft_log_stream_out_" + tmpKey(path)
-    // batch-sized state width ([[withShufflePartitionsCap]]): the
-    // complete-mode aggregation instantiates one state store per shuffle
-    // partition per batch — at the session's 32-wide default that is
-    // 32 store open/commits per micro-batch for a 5-group aggregate; the
-    // source's own parallelism (maxFilesPerTrigger splits) is unaffected
-    withShufflePartitionsCap(spark, 8) {
-      val q = stream.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("[graft] q_log_stream drain timed out after 300 s")
-      }
+    // batch-sized state width: the complete-mode aggregation
+    // instantiates one state store per shuffle partition per batch — at
+    // the session's 32-wide default that is 32 store open/commits per
+    // micro-batch for a 5-group aggregate; the source's own parallelism
+    // (maxFilesPerTrigger splits) is unaffected
+    drain(stream, "q_log_stream", stateCap = Some(8)) {
+      _.outputMode("complete").format("memory").queryName(sinkName)
     }
     spark.table(sinkName).orderBy("event_type")
   }

@@ -364,8 +364,9 @@ private[graft] object PhysicalQueries extends QueryFamily {
     * floor) to exercise the exact plan shape (`PlanSpec` asserts the
     * `bloom_filter_might_contain` probe-side filter). The rewrite is
     * semantics-neutral — the oracle is the plain join — and the tuning
-    * confs are scoped: set, the join EXECUTED eagerly, restored in
-    * `finally`, the bounded aggregate returned as a local relation.
+    * confs are scoped: the join is EXECUTED eagerly in a [[sessionWith]]
+    * clone that carries them, the bounded aggregate returned as a local
+    * relation of the caller's session.
     */
   query("q_runtime_bloom",
       """SELECT l_returnflag, count(*) AS n,
@@ -374,30 +375,23 @@ private[graft] object PhysicalQueries extends QueryFamily {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (spark, dir) =>
-    val tuned = Map(
+    val tuned = sessionWith(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "512MB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = tuned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val urgent = t(spark, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 150000)
-        .select("o_orderkey")
-      val agg = t(spark, dir, "lineitem")
-        .join(urgent, col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          sum("l_quantity").cast("long").as("sum_qty"),
-          countDistinct(col("o_orderkey")).as("n_orders"))
-        .orderBy("l_returnflag")
-      val rows = agg.collect() // bounded: one row per return flag
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    val urgent = t(tuned, dir, "orders")
+      .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 150000)
+      .select("o_orderkey")
+    val agg = t(tuned, dir, "lineitem")
+      .join(urgent, col("l_orderkey") === col("o_orderkey"))
+      .groupBy("l_returnflag")
+      .agg(count(lit(1)).as("n"),
+        sum("l_quantity").cast("long").as("sum_qty"),
+        countDistinct(col("o_orderkey")).as("n_orders"))
+      .orderBy("l_returnflag")
+    val rows = agg.collect() // bounded: one row per return flag
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
   }
 
   /** Partitioned fact + filtered dim for `q_dpp`: the fact side is the
@@ -456,7 +450,7 @@ private[graft] object PhysicalQueries extends QueryFamily {
     * zero data pages decompressed, the ANALYZE-speed path for 100 TB
     * freshness checks. Needs the DSv2 parquet reader
     * (`useV1SourceList=""`) plus `parquet.aggregatePushdown`; both
-    * scoped set→execute→restore (the `q_runtime_bloom` discipline).
+    * scoped to a [[sessionWith]] clone (the `q_runtime_bloom` discipline).
     * `PlanSpec` asserts `PushedAggregation` lands in the scan.
     */
   query("q_meta_count",
@@ -464,19 +458,12 @@ private[graft] object PhysicalQueries extends QueryFamily {
         |       min(l_orderkey) AS min_key, max(l_orderkey) AS max_key,
         |       min(l_partkey) AS min_part, max(l_partkey) AS max_part
         |FROM lineitem""".stripMargin) { (spark, dir) =>
-    val tuned = Map(
+    val tuned = sessionWith(spark,
       "spark.sql.sources.useV1SourceList" -> "",
       "spark.sql.parquet.aggregatePushdown" -> "true")
-    val prev = tuned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val agg = metaCountFrame(spark, dir)
-      val rows = agg.collect() // exactly one row
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    val agg = metaCountFrame(tuned, dir)
+    val rows = agg.collect() // exactly one row
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
   }
 
   /** Small-file compaction ([[graft.ops.Compaction]]) end-to-end: the

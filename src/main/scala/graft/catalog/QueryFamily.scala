@@ -13,13 +13,14 @@ private[graft] abstract class QueryFamily {
 
   /** Declares the query `name` with its DuckDB `oracle`. A query declared
     * with `Drain.RocksDb` runs `build` under
-    * [[QuerySupport.withRocksDbStateStore]].
+    * [[QuerySupport.onRocksDbStateStore]], so its drains start on the
+    * RocksDB state store.
     */
   protected final def query(name: String, oracle: String, drain: Drain = Drain.None)(
       build: (SparkSession, String) => DataFrame): Unit = {
     val run: (SparkSession, String) => DataFrame = drain match {
       case Drain.RocksDb =>
-        (spark, dir) => QuerySupport.withRocksDbStateStore(spark)(build(spark, dir))
+        (spark, dir) => QuerySupport.onRocksDbStateStore(build(spark, dir))
       case _ => build
     }
     declared += QueryDef(name, run, oracle, drain)

@@ -1,15 +1,20 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.DynamicVariable
+
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSql, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.ops.Dedup
 
 /** Helpers shared by the query families: table loading, the cross-engine
   * rounding rule, /tmp fixture keys, log synthesis, streaming drains and
-  * scoped conf overrides, plus the DuckDB SQL fragments more than one
-  * family's oracles use.
+  * scoped-conf sessions, plus the DuckDB SQL fragments more than one
+  * family's oracles use. This is the one catalog file that starts streams
+  * or writes session conf: query bodies [[drain]] their streams and run
+  * scoped-conf batch work in a [[sessionWith]] clone.
   */
 private[graft] object QuerySupport {
 
@@ -210,99 +215,114 @@ private[graft] object QuerySupport {
     out
   }
 
-  /** One-time: events as 8 ts-range parquet chunks (timestamps already
-    * converted to micros, so the stream side needs no nanos handling).
-    * Chunks are written SEQUENTIALLY so file mtimes ascend with event time:
-    * the file stream ingests oldest-first, i.e. in event-time order — rows
-    * arriving behind the watermark would be dropped as late (correct
-    * streaming semantics, but not what these queries measure).
-    */
-  /** Run `body` with the RocksDB state-store provider AND changelog
-    * checkpointing enabled, restoring the session's prior values after.
-    * Changelog checkpointing is the production RocksDB configuration —
-    * each batch commits an incremental changelog instead of uploading a
-    * full snapshot — and the faster one here too (interleaved A/B:
-    * q_list_state median 6.9 → 5.4 s, transform/map state −10%, none
-    * worse). One helper so all transformWithState queries and the bench
-    * floor stay on identical settings.
-    */
-  /** Run `body` with `spark.sql.shuffle.partitions` capped at `cap`
-    * (never raised), restoring the prior value after — the micro-batch
-    * sizing discipline of [[graft.streaming.StreamingNearDedup.dedupBatch]]
-    * and `drainAppendToParquet`'s `statePartitionCap`, factored out for
-    * drains that manage their own sink. A micro-batch's frames are
-    * trigger-sized, not box-sized: running their shuffles (and any state
-    * stores keyed off the shuffle width) at the session's cluster-sized
-    * width spends more on task launch and state-store open/commit than on
-    * data (measured 6.86 → 5.86 s on the near-dedup drain at 32 → 8,
-    * dev/DRAIN_PROFILE.md r13). Deployments with bigger triggers size the
-    * cap to their own batch volume.
-    */
-  /** Concurrency (ADVICE r16): the conf is SESSION-global and drains may
-    * overlap (sink names are dir-keyed for exactly that reason), so a raw
-    * save/set/restore races — drain B can save A's capped value as its
-    * "prev" and restore it after A restores the real one, leaving the
-    * session permanently capped. Guarded by a per-session reference
-    * count: the FIRST entrant saves the session value, every entrant may
-    * only LOWER the effective value, and only the LAST exitor restores
-    * the saved one. A non-integer session value (e.g. `auto` under some
-    * resource managers) skips capping entirely instead of throwing.
-    */
-  private val shufflePartitionsCapGuard =
-    new java.util.HashMap[SparkSession, (Int, String)]()
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
-  private[graft] def withShufflePartitionsCap[A](spark: SparkSession, cap: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val entered = shufflePartitionsCapGuard.synchronized {
-      val prev = spark.conf.get(key)
-      prev.toIntOption match {
-        case None => false // non-integer deployment value: run uncapped
-        case Some(cur) =>
-          val old = shufflePartitionsCapGuard.get(spark)
-          if (old == null) shufflePartitionsCapGuard.put(spark, (1, prev))
-          else shufflePartitionsCapGuard.put(spark, (old._1 + 1, old._2))
-          if (cur > cap) spark.conf.set(key, cap.toString)
-          true
-      }
-    }
-    try body
-    finally if (entered) shufflePartitionsCapGuard.synchronized {
-      val (n, saved) = shufflePartitionsCapGuard.get(spark)
-      if (n == 1) {
-        shufflePartitionsCapGuard.remove(spark)
-        spark.conf.set(key, saved)
-      } else shufflePartitionsCapGuard.put(spark, (n - 1, saved))
-    }
+  /** `cap` as a shuffle-width setting for `spark`: `min(session, cap)`,
+    * or nothing when the session value is already at or under it. A
+    * non-integer session value (e.g. `auto` under some resource managers)
+    * is left alone.
+    *
+    * A micro-batch's frames are trigger-sized, not box-sized: running
+    * their shuffles (and the state stores keyed off the shuffle width) at
+    * the session's cluster-sized width spends more on task launch and
+    * state-store open/commit than on data (measured 6.86 → 5.86 s on the
+    * near-dedup drain at 32 → 8, dev/DRAIN_PROFILE.md r13). Deployments
+    * with bigger triggers size the cap to their own batch volume.
+    */
+  private def capConf(spark: SparkSession, cap: Int): Option[(String, String)] =
+    spark.conf.get(ShufflePartitions).toIntOption
+      .filter(_ > cap).map(_ => ShufflePartitions -> cap.toString)
+
+  /** A clone of `spark` (its conf, temp views and functions) with `confs`
+    * set. Batch work that needs a scoped conf runs there, so no query body
+    * writes the caller's session conf and concurrent queries never see
+    * each other's overrides. Frames cross between the two sessions with
+    * [[GraftSql.ofRows]].
+    */
+  private[graft] def sessionWith(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val s = GraftSql.cloneSession(spark)
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
   }
 
+  /** [[sessionWith]] the shuffle width capped at `cap` ([[capConf]]). */
+  private[graft] def capped(spark: SparkSession, cap: Int): SparkSession =
+    sessionWith(spark, capConf(spark, cap).toSeq: _*)
+
   /** The state store every RocksDB drain runs on: the provider plus
-    * changelog checkpointing. `Bench.measureFloor` measures the stateful
-    * floor on the same pair, through [[withRocksDbStateStore]].
+    * changelog checkpointing. Changelog checkpointing is the production
+    * RocksDB configuration — each batch commits an incremental changelog
+    * instead of uploading a full snapshot — and the faster one here too
+    * (interleaved A/B: q_list_state median 6.9 → 5.4 s, transform/map
+    * state −10%, none worse). `Bench.measureFloor` measures the stateful
+    * floor on the same pair.
     */
   private val RocksDbStateStoreConfs = Seq(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
-  /** Runs `body` with [[RocksDbStateStoreConfs]] set on the session and
-    * restores the previous values afterwards.
+  /** The state-store conf [[start]] pins on this thread's streams. */
+  private val stateStoreConfs = new DynamicVariable[Seq[(String, String)]](Nil)
+
+  /** Runs `body` so that every stream it [[start]]s (or [[drain]]s) runs
+    * on the RocksDB state store. The session conf is not changed.
     */
-  private[graft] def withRocksDbStateStore[A](spark: SparkSession)(body: => A): A = {
-    val prev = RocksDbStateStoreConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    RocksDbStateStoreConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+  private[graft] def onRocksDbStateStore[A](body: => A): A =
+    stateStoreConfs.withValue(RocksDbStateStoreConfs)(body)
+
+  /** Serializes the set → start → restore window of [[start]]. */
+  private val startLock = new Object
+
+  /** Starts `sink(stream.writeStream)` with its state conf pinned: the
+    * shuffle width capped at `stateCap` ([[capConf]]) and the state store
+    * bound by [[onRocksDbStateStore]]. The conf is set on the session only
+    * around `start()`, under one lock, and restored straight after: Spark's
+    * `StreamExecution` clones the session when `start()` constructs it and
+    * runs every batch on that clone (the values are also recorded in the
+    * offset log), so the stream keeps the pinned conf while the caller's
+    * session — and any other drain on it — never runs under it.
+    */
+  private[graft] def start[T](stream: Dataset[T], stateCap: Option[Int] = None)(
+      sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+    val spark = stream.sparkSession
+    val writer = sink(stream.writeStream)
+    startLock.synchronized {
+      val pins = stateStoreConfs.value ++ stateCap.flatMap(capConf(spark, _))
+      val prev = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
+      pins.foreach { case (k, v) => spark.conf.set(k, v) }
+      try writer.start()
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
     }
   }
 
-  /** Shared append-mode AvailableNow drain to a parquet sink, used by
-    * every production-shape streaming query. `statePartitionCap` bounds the
+  /** The one way a catalog query drains a stream: [[start]]s
+    * `sink(stream.writeStream)` with `Trigger.AvailableNow` on a fresh
+    * ephemeral checkpoint, waits for it to finish, and deletes the
+    * checkpoint. A drain still running after 300 s is stopped and fails
+    * the query, so a half-written sink is never read.
+    */
+  private[graft] def drain[T](stream: Dataset[T], name: String, stateCap: Option[Int] = None)(
+      sink: DataStreamWriter[T] => DataStreamWriter[T]): Unit = {
+    val ckpt = graft.Scratch.ephemeralCkptDir(s"graft_${name}_ckpt").toFile
+    try {
+      val q = start(stream, stateCap) { w =>
+        sink(w).option("checkpointLocation", ckpt.toString).trigger(Trigger.AvailableNow())
+      }
+      if (!q.awaitTermination(300000)) {
+        q.stop()
+        throw new IllegalStateException(s"[graft] $name drain timed out after 300 s")
+      }
+    } finally deleteRec(ckpt) // one-shot: the next drain takes a fresh one
+  }
+
+  /** Append-mode [[drain]] to a parquet sink, used by every
+    * production-shape streaming query. `statePartitionCap` bounds the
     * stateful operator's shuffle partitions (state stores per partition are
-    * the cost; at real scale this is sized to executor count) via an
-    * exception-safe conf override. Timeout stops the query so a
-    * half-written sink is never read, then fails the harness.
+    * the cost; at real scale this is sized to executor count).
     *
     * `exactlyOnce = true` routes each batch through
     * [[graft.streaming.IdempotentParquetSink]] (overwrite-by-batch-id), so
@@ -316,32 +336,13 @@ private[graft] object QuerySupport {
       sinkDir: String,
       qname: String,
       statePartitionCap: Option[Int] = None,
-      exactlyOnce: Boolean = false): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val spark = stream.sparkSession
-    val ckpt = graft.Scratch.ephemeralCkptDir(s"graft_${qname}_ckpt").toString
-    def run(): Boolean = {
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (exactlyOnce) graft.streaming.IdempotentParquetSink.writeBatch(batch, batchId, sinkDir)
-          else batch.write.mode("append").parquet(sinkDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) { q.stop(); false } else true
+      exactlyOnce: Boolean = false): Unit =
+    drain(stream, qname, statePartitionCap) {
+      _.outputMode("append").foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (exactlyOnce) graft.streaming.IdempotentParquetSink.writeBatch(batch, batchId, sinkDir)
+        else batch.write.mode("append").parquet(sinkDir)
+      }
     }
-    val finished = statePartitionCap match {
-      case None => run()
-      case Some(cap) => withShufflePartitionsCap(spark, cap)(run())
-    }
-    // the per-drain checkpoint is one-shot (next drain creates a fresh one):
-    // delete it, or repeated bench/verify rounds accumulate offset logs and
-    // state-store files in /tmp without bound
-    if (finished) deleteRec(new java.io.File(ckpt))
-    if (!finished)
-      throw new IllegalStateException(s"[graft] $qname drain timed out after 300 s")
-  }
 
   /** A drain that emitted zero rows never creates the sink directory —
     * that is the correct EMPTY result (e.g. every window withheld by the

@@ -55,24 +55,23 @@ private[graft] object StreamQueries extends QueryFamily {
       // per-batch fold must land on the same final snapshot as the one-shot
       // batch compaction
       PhysicalQueries.CdcSnapshotOracle, Drain.Stateless) { (spark, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val srcDir = streamChunksDir(spark, dir)
     val snapBase = s"/tmp/graft_streamcdc/${tmpKey(dir)}"
     deleteRec(new java.io.File(snapBase)) // rebuild per run: the drain IS the query
     val snapDir = s"$snapBase/snap"
-    val ev = events(spark, dir)
-    // seed snapshot at the same capped width as the batches below — a
-    // 32-file seed makes every subsequent batch pay a 32-file listing+read
-    withShufflePartitionsCap(spark, 8) {
-      ev.filter(col("event_type") === "signup")
-        .groupBy("user_id")
-        .agg(min_by(struct(col("event_type"), col("value")),
-          struct(col("ts"), col("event_id"))).as("__first"))
-        .select(col("user_id"), col("__first.event_type").as("event_type"),
-          col("__first.value").as("value"))
-        .write.mode("overwrite").parquet(snapDir)
-    }
-    val ckpt = graft.Scratch.ephemeralCkptDir("graft_streamcdc_ckpt").toString
+    // batch-sized width ([[capped]]) for the seed write and each batch's
+    // compact: the compact's aggregate + full-outer join and the snapshot
+    // rewrite ran at the session's 32-wide default per micro-batch —
+    // 32-way shuffles over trigger-sized frames AND a 32-file snapshot
+    // that the NEXT batch pays to list and read; 8 tracks the batch volume
+    val narrow = capped(spark, 8)
+    events(narrow, dir).filter(col("event_type") === "signup")
+      .groupBy("user_id")
+      .agg(min_by(struct(col("event_type"), col("value")),
+        struct(col("ts"), col("event_id"))).as("__first"))
+      .select(col("user_id"), col("__first.event_type").as("event_type"),
+        col("__first.value").as("value"))
+      .write.mode("overwrite").parquet(snapDir)
     val stream = spark.readStream
       .schema("event_id LONG, event_type STRING, user_id LONG, ts TIMESTAMP, value DOUBLE")
       .option("maxFilesPerTrigger", 1)
@@ -80,16 +79,10 @@ private[graft] object StreamQueries extends QueryFamily {
       .filter(col("event_type") =!= "signup")
       .withColumn("op",
         when(col("event_type") === "error", "delete").otherwise("upsert"))
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // batch-sized width ([[withShufflePartitionsCap]]): the compact's
-        // aggregate + full-outer join and the snapshot rewrite all ran at
-        // the session's 32-wide default per micro-batch — 32-way shuffles
-        // over trigger-sized frames AND a 32-file snapshot that the NEXT
-        // batch pays to list and read; 8 tracks the batch volume
-        withShufflePartitionsCap(spark, 8) {
-          val cur = spark.read.parquet(snapDir)
+    drain(stream, "q_streaming_cdc") {
+      _.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          val cur = narrow.read.parquet(snapDir)
           val next = graft.ops.CdcApply.compact(
             cur, batch.toDF(), Seq("user_id"), Seq("ts", "event_id"),
             "op", "delete", Seq("event_type", "value"))
@@ -99,15 +92,7 @@ private[graft] object StreamQueries extends QueryFamily {
           if (!new java.io.File(tmp).renameTo(new java.io.File(snapDir)))
             throw new IllegalStateException("snapshot swap failed")
         }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("[graft] q_streaming_cdc drain timed out")
-      }
-    } finally deleteRec(new java.io.File(ckpt)) // one-shot either way
+    }
     spark.read.parquet(snapDir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_users"),
@@ -120,7 +105,7 @@ private[graft] object StreamQueries extends QueryFamily {
     * successor to the legacy `flatMapGroupsWithState` that
     * `q_sessionize_custom` covers): per-user running (count, Σvalue_u)
     * emitting one cumulative row per key per touched micro-batch, state
-    * in the REQUIRED RocksDB store (conf scoped set→drain→restore).
+    * in the REQUIRED RocksDB store (pinned when the drain starts).
     * Emissions carry cumulative totals, so the per-key MAX over all
     * emissions equals the batch aggregate no matter how the stream was
     * chunked — the identity the oracle pins.
@@ -224,18 +209,11 @@ private[graft] object StreamQueries extends QueryFamily {
     // derived from the dir like q_log_stream's: concurrent drains must not
     // collide on a duplicate active query name.
     val sinkName = "graft_stream_out_" + tmpKey(dir)
-    // batch-sized state width ([[withShufflePartitionsCap]], the
-    // q_log_stream rationale): one state store per shuffle partition for
-    // a few-hundred-window aggregate; scan-side parallelism unaffected
-    withShufflePartitionsCap(spark, 8) {
-      val q = stream.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop() // a partial memory table would silently fail the oracle
-        throw new IllegalStateException("[graft] q_streaming_window drain timed out after 300 s")
-      }
+    // batch-sized state width (the q_log_stream rationale): one state
+    // store per shuffle partition for a few-hundred-window aggregate;
+    // scan-side parallelism unaffected
+    drain(stream, "q_streaming_window", stateCap = Some(8)) {
+      _.outputMode("complete").format("memory").queryName(sinkName)
     }
     spark.table(sinkName).orderBy("hour", "event_type")
   }
@@ -472,33 +450,24 @@ private[graft] object StreamQueries extends QueryFamily {
         |       true AS fold_exact, true AS cms_ok
         |FROM events WHERE user_id IS NOT NULL
         |GROUP BY 1 ORDER BY n DESC, user_id LIMIT 10""".stripMargin, Drain.Stateless) { (spark, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val srcDir = streamChunksDir(spark, dir)
     val (eps, conf, seed) = (0.0001, 0.999, 42)
     var folded: org.apache.spark.util.sketch.CountMinSketch = null
-    val ckpt = graft.Scratch.ephemeralCkptDir("graft_streamhh_ckpt").toFile
     val stream = spark.readStream
       .schema("event_id LONG, event_type STRING, user_id LONG, ts TIMESTAMP, value DOUBLE")
       .option("maxFilesPerTrigger", 4)
       .parquet(srcDir)
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // distributed per-batch sketch; sequential foreachBatch -> the
-        // driver-side fold needs no synchronization
-        val s = batch.filter(col("user_id").isNotNull)
-          .stat.countMinSketch("user_id", eps, conf, seed)
-        if (folded == null) folded = s else folded.mergeInPlace(s)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("[graft] q_streaming_heavy_hitters drain timed out")
-      }
-    } finally deleteRec(ckpt)
+    drain(stream, "q_streaming_heavy_hitters") {
+      _.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          // distributed per-batch sketch; sequential foreachBatch -> the
+          // driver-side fold needs no synchronization
+          val s = batch.filter(col("user_id").isNotNull)
+            .stat.countMinSketch("user_id", eps, conf, seed)
+          if (folded == null) folded = s else folded.mergeInPlace(s)
+          ()
+        }
+    }
     val ev = events(spark, dir).filter(col("user_id").isNotNull)
     val batchSketch = ev.stat.countMinSketch("user_id", eps, conf, seed)
     val exact = ev.groupBy("user_id").agg(count(lit(1)).as("n"))

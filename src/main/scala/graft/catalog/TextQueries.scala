@@ -356,7 +356,6 @@ private[graft] object TextQueries extends QueryFamily {
     * batching must not change one value.
     */
   query("q_streaming_classify", QualityClassifierOracleSql, Drain.Stateless) { (spark, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val docs = spread(t(spark, dir, "documents"))
     val model = QualityClassifier.train(
       docs.filter(col("doc_id") % 2 === 0)
@@ -369,21 +368,17 @@ private[graft] object TextQueries extends QueryFamily {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    val ckpt = graft.Scratch.ephemeralCkptDir("graft_classify_ckpt").toString
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // NO width cap here: measured 3.20 -> 3.35 s with one (r16 batch-4
-        // drill) — the per-batch cost is the tokenize+score CPU, which
-        // wants the full core count, not state/task overhead
-        graft.streaming.IdempotentParquetSink.writeBatch(
-          QualityClassifier.score(b, "doc_id", "text", model, carryCols = Seq("lang")),
-          id, sinkDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(300000)) q.stop()
-    deleteRec(new java.io.File(ckpt))
+    drain(stream, "q_streaming_classify") {
+      _.outputMode("append")
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+          // NO width cap here: measured 3.20 -> 3.35 s with one (r16 batch-4
+          // drill) — the per-batch cost is the tokenize+score CPU, which
+          // wants the full core count, not state/task overhead
+          graft.streaming.IdempotentParquetSink.writeBatch(
+            QualityClassifier.score(b, "doc_id", "text", model, carryCols = Seq("lang")),
+            id, sinkDir)
+        }
+    }
     val agg = readSinkOrEmpty(spark, sinkDir,
       "doc_id LONG, lang STRING, n_tokens LONG, n_oov LONG, scaled_score LONG")
       .groupBy("lang")
@@ -1037,7 +1032,6 @@ private[graft] object TextQueries extends QueryFamily {
     * the exactly-once sink, and the oracle is the batch oracle VERBATIM.
     */
   query("q_streaming_c4", C4CleanOracleSql, Drain.Stateless) { (spark, dir) =>
-    import org.apache.spark.sql.streaming.Trigger
     val srcDir = docsStreamSrcDir(spark, dir)
     val sinkDir = s"/tmp/graft_stream_c4_sink/${tmpKey(dir)}"
     deleteRec(new java.io.File(sinkDir))
@@ -1045,19 +1039,15 @@ private[graft] object TextQueries extends QueryFamily {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    val ckpt = graft.Scratch.ephemeralCkptDir("graft_c4_ckpt").toString
-    val q = stream.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // NO width cap here: measured 1.97 -> 2.16 s with one (r16 batch-4
-        // drill) — the line-level clean pipeline is CPU-bound per batch
-        graft.streaming.IdempotentParquetSink.writeBatch(
-          c4CleanVerdicts(c4Pages(b)), id, sinkDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(300000)) q.stop()
-    deleteRec(new java.io.File(ckpt))
+    drain(stream, "q_streaming_c4") {
+      _.outputMode("append")
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+          // NO width cap here: measured 1.97 -> 2.16 s with one (r16 batch-4
+          // drill) — the line-level clean pipeline is CPU-bound per batch
+          graft.streaming.IdempotentParquetSink.writeBatch(
+            c4CleanVerdicts(c4Pages(b)), id, sinkDir)
+        }
+    }
     c4CleanAgg(readSinkOrEmpty(spark, sinkDir,
       "doc_id LONG, lang STRING, n_lines LONG, n_kept_lines LONG, " +
         "page_kept BOOLEAN, clean_len LONG"))

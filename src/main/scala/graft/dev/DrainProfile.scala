@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-batch breakdown of a streaming drain query (VERDICT r10 item 2):
@@ -10,19 +9,16 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * `stateOperators` (commit times, store sizes) — so "where do the
   * 3 seconds go" is measured, not guessed.
   *
-  * Usage: `sbt "runMain graft.dev.DrainProfile q_streaming_left_join"`.
+  * Usage: `sbt "runMain graft.dev.DrainProfile q_streaming_left_join"`
+  * (session: [[graft.HarnessSession]]; `SPARK_GRAFT_CPUS=32` reproduces
+  * the local[32] numbers in dev/DRAIN_PROFILE.md).
   */
 object DrainProfile {
   def main(args: Array[String]): Unit = {
     val qname = if (args.nonEmpty) args(0) else "q_streaming_left_join"
     val runs = if (args.length > 1) args(1).toInt else 3
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.HarnessSession()
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()

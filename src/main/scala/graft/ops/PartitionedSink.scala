@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Lineage.CutSyntax
@@ -36,7 +36,16 @@ object PartitionedSink {
       path: String,
       partCols: Seq[String],
       sortCols: Seq[String],
-      filesPerPartition: Int = 4): Unit = {
+      filesPerPartition: Int = 4): Unit =
+    layoutWriter(df, partCols, sortCols, filesPerPartition).parquet(path)
+
+  /** The salted, clustered overwrite of `df` that [[writePartitioned]]
+    * and [[upsertByKey]] share. */
+  private def layoutWriter(
+      df: DataFrame,
+      partCols: Seq[String],
+      sortCols: Seq[String],
+      filesPerPartition: Int): DataFrameWriter[Row] = {
     require(partCols.nonEmpty, "partCols must not be empty")
     val salt: Column =
       if (filesPerPartition <= 1) lit(0)
@@ -53,7 +62,7 @@ object PartitionedSink {
     val clustered =
       if (sortCols.isEmpty) shuffled
       else shuffled.sortWithinPartitions((partCols ++ sortCols).map(col): _*)
-    clustered.write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
+    clustered.write.mode("overwrite").partitionBy(partCols: _*)
   }
 
   /** Keyed UPSERT into an existing [[writePartitioned]] layout — the
@@ -144,16 +153,12 @@ object PartitionedSink {
         .unionByName(b)
         .cutLineage()
       // same salted layout as writePartitioned; dynamic overwrite replaces
-      // only the touched partitions
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try writePartitioned(merged, path, Seq(partCol), sortCols, filesPerPartition)
-      finally {
-        prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
+      // only the touched partitions. Passed as this write's own option
+      // (read ahead of the session's spark.sql.sources.partitionOverwriteMode),
+      // so the caller's session conf is never touched
+      layoutWriter(merged, Seq(partCol), sortCols, filesPerPartition)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
     } finally b.unpersist(blocking = false)
   }
 }

@@ -11,6 +11,17 @@ object GraftSql {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A new session on `spark`'s context with a copy of its conf, temp
+    * views and functions; conf set on one is invisible to the other. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df`'s logical plan as a DataFrame of `spark` (e.g. a checkpointed
+    * frame carried into or out of a [[cloneSession]] clone). */
+  def ofRows(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
+
   def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf
 

@@ -63,31 +63,32 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   /** Drain `srcDir` through a FIXED checkpoint under RocksDB + changelog
-    * checkpointing, through the same helper the transformWithState queries
-    * run under (catalog.QuerySupport.withRocksDbStateStore). Each call is
+    * checkpointing, pinned at start the way the transformWithState queries'
+    * drains are (catalog.QuerySupport.onRocksDbStateStore). Each call is
     * one "process lifetime": AvailableNow drains what is present, stops.
     */
   private def drainChangelog(
       srcDir: String, ckpt: String): Set[(String, String, Long)] =
-    catalog.QuerySupport.withRocksDbStateStore(spark) {
+    catalog.QuerySupport.onRocksDbStateStore {
       val out = collection.mutable.Set.empty[(String, String, Long)]
       val schema = spark.read.parquet(srcDir).schema
-      val q = spark.readStream.schema(schema)
+      val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("k"))
         .agg(count(lit(1)).as("n"))
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("ws"),
           col("k"), col("n"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.collect().foreach(r => out.synchronized {
-            out += ((r.getString(0), r.getString(1), r.getLong(2)))
-          })
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
+      val q = catalog.QuerySupport.start(stream) {
+        _.outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            batch.collect().foreach(r => out.synchronized {
+              out += ((r.getString(0), r.getString(1), r.getLong(2)))
+            })
+          }
+          .trigger(Trigger.AvailableNow())
+      }
       assert(q.awaitTermination(120000), "drain timed out")
       out.toSet
     }
