@@ -1,5 +1,5 @@
 #!/bin/bash
-# Fresh-JVM runner for graft mains (Bench/Verify/PlanDump/ScaleCurve) from a
+# Fresh-JVM runner for graft mains (Bench/Verify/dev.QueryProfile/dev.ScaleCurve) from a
 # snapshot of the compiled classes — the dev/bench_r11..r16 recipe: compile +
 # copyResources once, snapshot to a frozen dir, then ONE fresh JVM per run
 # with the build.sbt add-opens set, so sbt startup/compile never pollutes a

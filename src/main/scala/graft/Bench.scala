@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query n times (default 3) against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line (also written to
@@ -52,6 +52,10 @@ object Bench {
   private val RocksDbQueries: Set[String] =
     SparkEntry.catalog.filter(_.drain == Drain.RocksDb).map(_.name).toSet
 
+  /** The action timed on every query's DataFrame; `dev.QueryProfile`
+    * profiles the same one. */
+  private[graft] def action(df: DataFrame): Long = df.count()
+
   /** Measure the per-drain admission floor: a 2-row file stream drained
     * through a fresh checkpoint with Trigger.AvailableNow into the noop
     * sink — zero data work by construction, so the elapsed time IS the
@@ -85,7 +89,7 @@ object Bench {
         }
         q.awaitTermination()
         val dt = (System.nanoTime() - t0) / 1e9
-        deleteRec(base.toFile)
+        Scratch.deleteRec(base.toFile)
         dt
       }.min
     // the stateful floor starts on the RocksDB drains' own store settings
@@ -93,11 +97,6 @@ object Bench {
     // the config difference
     if (stateful) catalog.QuerySupport.onRocksDbStateStore(drains())
     else drains()
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete()
   }
 
   /** Historical quiet-box bands for the CODE-FREE floors (the floor code
@@ -160,7 +159,7 @@ object Bench {
     // JVM/session warmup outside the timed region (JIT, codegen cache,
     // filesystem metadata) so per-query numbers measure the queries; a
     // missing warmup dataset must not abort the benchmark of sfDir
-    try SparkEntry.entry(spark).count()
+    try action(SparkEntry.entry(spark))
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] warmup skipped: ${e.getMessage}")
     }
@@ -177,7 +176,7 @@ object Bench {
       val ok =
         // NonFatal: an OutOfMemoryError must crash the run, not be logged
         // as a failed sample while later queries "succeed" in a broken JVM
-        try { fn(spark, sfDir).count(); true }
+        try { action(fn(spark, sfDir)); true }
         catch { case scala.util.control.NonFatal(_) => false }
       val dt = (System.nanoTime() - t0) / 1e9
       if (ok) okTimes(name) = okTimes(name) :+ dt

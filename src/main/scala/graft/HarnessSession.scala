@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The session the harness mains (`Bench`, `Verify`, `dev.JobProfile`,
-  * `dev.DrainProfile`, `dev.PlanDump`) run the catalog on:
+/** The one session the harness mains (`Bench`, `Verify`,
+  * `dev.QueryProfile`, `dev.ScaleCurve`) run on:
   * `local[SPARK_GRAFT_CPUS]` (default 4) with the [[GraftExtensions]]
   * users get, one shuffle partition per core, UTC session time, no UI,
-  * WARN logging.
+  * WARN logging; the heap is the JVM's own `-Xmx`. `dev.FaultDrive`
+  * (master from spark-submit) and `dev.DirLockDrive` (child JVMs) keep
+  * their own builders.
   */
 private[graft] object HarnessSession {
   def apply(): SparkSession = {

@@ -21,4 +21,10 @@ object Scratch {
       else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     java.nio.file.Files.createTempDirectory(base, prefix)
   }
+
+  /** Deletes `f` and everything under it; a missing path is a no-op. */
+  private[graft] def deleteRec(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
+    f.delete()
+  }
 }

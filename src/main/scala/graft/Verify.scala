@@ -10,22 +10,18 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     val spark = HarnessSession()
     new java.io.File(outDir).mkdirs()
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-      f.delete()
-    }
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       // delete any previous output FIRST: a failed query must leave a
       // MISSING dir (recorded as err by the driver), never a stale green
       // result from an earlier run
-      deleteRec(new java.io.File(s"$outDir/$name"))
+      Scratch.deleteRec(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        deleteRec(new java.io.File(s"$outDir/$name")) // no torn output either
+        Scratch.deleteRec(new java.io.File(s"$outDir/$name")) // no torn output either
       }
     }
     def q(s: String): String = JsonText.quote(s)

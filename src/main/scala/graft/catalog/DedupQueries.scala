@@ -4,6 +4,7 @@ package catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch.deleteRec
 import graft.functions.{RollingHashFingerprint, TextFunctions => TF}
 import graft.ops.{Chunking, Dedup, DupGroups, Sampling}
 import QuerySupport._

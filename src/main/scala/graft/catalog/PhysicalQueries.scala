@@ -4,6 +4,7 @@ package catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch.deleteRec
 import graft.ops.{AsOfJoin, PartitionedSink}
 import QuerySupport._
 

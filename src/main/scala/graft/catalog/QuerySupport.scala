@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, GraftSql, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
+import graft.Scratch.deleteRec
 import graft.ops.Dedup
 
 /** Helpers shared by the query families: table loading, the cross-engine
@@ -74,11 +75,6 @@ private[graft] object QuerySupport {
   private[graft] def events(spark: SparkSession, dir: String): DataFrame = {
     val raw = eventsRaw(spark, dir)
     raw.withColumn("ts", eventsTsCol(raw.schema("ts").dataType))
-  }
-
-  private[graft] def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
   }
 
   /** The one /tmp-path key scheme for per-dir sinks and caches. Folds a

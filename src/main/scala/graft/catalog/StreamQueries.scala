@@ -4,6 +4,7 @@ package catalog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Scratch.deleteRec
 import graft.ops.Chunking
 import QuerySupport._
 
@@ -130,7 +131,7 @@ private[graft] object StreamQueries extends QueryFamily {
     // q_streaming_join batch-count rationale. The declared result is
     // batching-INVARIANT by construction: emissions are cumulative and
     // the readout takes the per-key MAX, the identity the oracle pins
-    // (JobProfile r17: 8 batches ran 0.21-0.75 s each, ~85% store
+    // (r17 per-job profile: 8 batches ran 0.21-0.75 s each, ~85% store
     // open/commit + planning on 2-partition state).
     val stream = spark.readStream
       .schema("event_id LONG, event_type STRING, user_id LONG, ts TIMESTAMP, value DOUBLE")

@@ -69,6 +69,7 @@ object DirLockDrive {
   private def artifactDir(work: String) = s"$work/artifact"
   private def postingsDir(work: String) = s"$work/postings"
 
+  // own builder, not HarnessSession: the drive's child JVMs build theirs here
   private def session(app: String): SparkSession = {
     val s = SparkSession.builder()
       .appName(app)
@@ -259,11 +260,7 @@ object DirLockDrive {
   }
 
   private def orchestrate(work: String): Unit = {
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete()
-    }
-    deleteRec(new java.io.File(work))
+    graft.Scratch.deleteRec(new java.io.File(work))
     val spark = session("dirlock-orchestrator")
     // seed both artifacts (upsertByKey needs an existing generation)
     PartitionedSink.writePartitioned(

@@ -44,6 +44,7 @@ object FaultDrive {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("baseline")
     val ckptDir = args.lift(1).getOrElse("/tmp/graft_fault_ckpt")
+    // own builder, not HarnessSession: the master (local-cluster) is spark-submit's
     val spark = SparkSession.builder()
       .appName(s"graft-fault-$mode")
       .config("spark.sql.shuffle.partitions", "8")

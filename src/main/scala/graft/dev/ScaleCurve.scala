@@ -2,7 +2,7 @@ package graft.dev
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Bm25, Dedup, DupGroups, Packing, PageRank, SubstringDedup}
@@ -55,16 +55,12 @@ import graft.ops.{Bm25, Dedup, DupGroups, Packing, PageRank, SubstringDedup}
   *    window) plus a per-document span-merge window function
   *
   * Runs: min of 2 per (family, size), sizes ascending so k=1 doubles as
-  * JIT warmup; single JVM, local[32].
+  * JIT warmup; single JVM on [[graft.HarnessSession]] (the recorded runs:
+  * `SPARK_GRAFT_CPUS=32`, and `SPARK_DRIVER_MEM=16g` via dev/run_fresh_jvm.sh).
   */
 object ScaleCurve {
 
   private val Mults = Seq(1, 3, 10, 30, 100)
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete()
-  }
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -105,15 +101,7 @@ object ScaleCurve {
     // (VERDICT r16 item 7: the sf0.1 bench is too small to demonstrate
     // parallel speedup)
     val coreOnly = args.contains("corescale")
-    val spark = SparkSession.builder()
-      .appName("graft-scale-curve")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.HarnessSession()
     // SPARK_GRAFT_CKPT_DIR: run the cc families with RELIABLE checkpoints
     // ([[graft.ops.Lineage]] auto mode) — re-running `cc` against the
     // local-mode numbers measures the durability tax. Honored ONLY in cc
@@ -417,7 +405,7 @@ object ScaleCurve {
       val sndDocs = spark.read.parquet(docsPath(10)).persist()
       sndDocs.count()
       val sink = s"$work/snd_curve/sink"
-      deleteRec(new java.io.File(s"$work/snd_curve"))
+      graft.Scratch.deleteRec(new java.io.File(s"$work/snd_curve"))
       val sample = Seq(1, 8, 16, 24, 32) // 1-based batch indices to record
       for (b <- 0 until 32) {
         val batch = sndDocs.filter(pmod(col("doc_id"), lit(50)) === b)
@@ -633,7 +621,7 @@ object ScaleCurve {
         val seenM = 10000 * k
         val nIdx = 1000L * k + 7 // ending in 7: the 3rd admit below compacts
         val root = s"$work/trig/x$k"
-        deleteRec(new java.io.File(root))
+        graft.Scratch.deleteRec(new java.io.File(root))
         val srcDir = new java.io.File(s"$root/src"); srcDir.mkdirs()
         val real = (0 until 1000).map { i =>
           val f = new java.io.File(srcDir, f"seen_$i%06d.log")

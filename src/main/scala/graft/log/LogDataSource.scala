@@ -59,10 +59,7 @@ object LogDataSource {
     * (JSON-encoded array, as the DataFrameReader writes it).
     */
   def paths(props: Map[String, String]): Seq[String] = {
-    val multi = props.get("paths").toSeq.flatMap { json =>
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      m.readValue(json, classOf[Array[String]]).toSeq
-    }
+    val multi = props.get("paths").toSeq.flatMap(LogMicroBatchStream.fromJson)
     val single = props.get("path").toSeq
     val all = multi ++ single
     require(all.nonEmpty, "[log] no input path specified")

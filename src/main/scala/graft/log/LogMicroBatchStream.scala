@@ -499,8 +499,8 @@ object LogMicroBatchStream {
 
   // one shared mapper: ObjectMapper construction is expensive and the
   // instance is thread-safe for plain read/write use; restore paths call
-  // fromJson once per log entry
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  // fromJson once per log entry, offsets and load paths once each
+  private[log] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private[log] def toJson(files: Seq[String]): String =
     mapper.writeValueAsString(files.toArray)
@@ -541,7 +541,7 @@ object LogStreamIndexOffset {
     val t = json.trim
     if (t.startsWith("[")) LogStreamOffset(LogMicroBatchStream.fromJson(t))
     else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(t).get("index")
+      val node = LogMicroBatchStream.mapper.readTree(t).get("index")
       if (node == null || !node.canConvertToLong) {
         throw new IllegalArgumentException(
           s"[log] malformed stream offset JSON (expected {\"index\":<long>} or a path array): $json")

@@ -144,10 +144,10 @@ object PageRank {
   // MEASURED AND REJECTED in r17: at bench scale both joins are broadcast
   // (the rank vector is small), so the explicit repartitions only ADDED an
   // exchange — q_pagerank/q_trustrank/q_bfs_hops read 1.04-1.08x against
-  // flat controls, and JobProfile shows the cost is per-job driver
-  // planning (0.96 s of 3.3 s inside jobs), which partitioning cannot
-  // touch. Revisit only with a benchmark whose rank vector exceeds the
-  // broadcast threshold.
+  // flat controls, and the per-job profile (graft.dev.QueryProfile) shows
+  // the cost is per-job driver planning (0.96 s of 3.3 s inside jobs),
+  // which partitioning cannot touch. Revisit only with a benchmark whose
+  // rank vector exceeds the broadcast threshold.
   private def cleanEdges(edges: DataFrame, srcCol: String, dstCol: String) =
     edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)

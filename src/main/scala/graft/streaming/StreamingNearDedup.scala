@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.{Dataset, GraftSql, Row}
 import org.apache.spark.sql.functions.col
 
 import graft.ops.{BandPostings, Dedup}
@@ -74,25 +74,20 @@ object StreamingNearDedup {
       bands: Int = 16,
       maxBucketSize: Int = 1000,
       shufflePartitions: Option[Int] = None): Unit = {
-    val spark = batch.sparkSession
     // micro-batch sizing: the per-batch frames are small (one trigger's
     // files), so a cluster-sized spark.sql.shuffle.partitions spends more
     // on task launch than on work across this body's ~25 jobs — measured
     // 6.86 -> 5.86 s on the bench drain at 32 -> 8 (dev/DRAIN_PROFILE.md
-    // round-13, both A/B orders). Opt-in because the conf is
-    // session-scoped: foreachBatch bodies run serially per query, but a
-    // session running OTHER concurrent queries would see it too.
-    shufflePartitions match {
-      case Some(n) =>
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-        try dedupBatchImpl(batch, batchId, sinkDir, idCol, textCol,
-          threshold, shingleN, numHashes, bands, maxBucketSize)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      case None =>
-        dedupBatchImpl(batch, batchId, sinkDir, idCol, textCol,
-          threshold, shingleN, numHashes, bands, maxBucketSize)
+    // round-13, both A/B orders). The width applies in a clone of the
+    // batch's session (its whole conf copied, the stream's AQE-off
+    // included), so the session the batch came from never runs under it.
+    val scoped = shufflePartitions.fold(batch) { n =>
+      val s = GraftSql.cloneSession(batch.sparkSession)
+      s.conf.set("spark.sql.shuffle.partitions", n.toString)
+      GraftSql.ofRows(s, batch.toDF())
     }
+    dedupBatchImpl(scoped, batchId, sinkDir, idCol, textCol,
+      threshold, shingleN, numHashes, bands, maxBucketSize)
   }
 
   private def dedupBatchImpl(

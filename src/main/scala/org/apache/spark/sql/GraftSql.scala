@@ -22,6 +22,12 @@ object GraftSql {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
 
+  /** Blocks until every event already posted to `spark`'s listener bus
+    * has reached every listener (`LiveListenerBus.waitUntilEmpty`, which
+    * gives up with a `TimeoutException` after 10 s). */
+  def waitForListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf
 

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.GraftSql
 import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingNearDedup
@@ -67,11 +73,7 @@ class StreamingNearDedupSpec extends SparkSpec {
     val b0 = Seq((1L, words("a", 12))).toDF("doc_id", "text")
     StreamingNearDedup.dedupBatch(b0, 0L, sink, "doc_id", "text")
     // simulate a pre-upgrade checkpoint / crash before the postings save
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete()
-    }
-    deleteRec(new java.io.File(s"$sink/_postings"))
+    Scratch.deleteRec(new java.io.File(s"$sink/_postings"))
     val b1 = Seq((2L, words("a", 11)), (3L, words("d", 12))).toDF("doc_id", "text")
     StreamingNearDedup.dedupBatch(b1, 1L, sink, "doc_id", "text")
     assert(keptIds(sink) == Set(1L, 3L)) // dedup still correct via re-banding
@@ -135,5 +137,40 @@ class StreamingNearDedupSpec extends SparkSpec {
     assert(keptIds(sink) == afterFirst)
     val rows = graft.streaming.IdempotentParquetSink.read(spark, sink).count()
     assert(rows == 2L)
+  }
+
+  test("shufflePartitions runs the body at that width while the batch's session keeps its own") {
+    val Shuffle = "spark.sql.shuffle.partitions"
+    // the batch's session as a stream hands it over: AQE off, its own width
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.enabled", "false")
+    caller.conf.set(Shuffle, "3")
+    def onCaller(rows: (Long, String)*) = caller.createDataFrame(rows).toDF("doc_id", "text")
+    val callerWidths = new ConcurrentLinkedQueue[String]()
+    val shuffleStageTasks = new ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        callerWidths.add(caller.conf.get(Shuffle))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.parentIds.nonEmpty) shuffleStageTasks.add(e.stageInfo.numTasks)
+    }
+    val sink = java.nio.file.Files.createTempDirectory("graft_snd").toString + "/sink"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      StreamingNearDedup.dedupBatch(onCaller((1L, words("a", 12)), (2L, words("b", 12))),
+        0L, sink, "doc_id", "text", shufflePartitions = Some(5))
+      StreamingNearDedup.dedupBatch(onCaller((3L, words("a", 11)), (4L, words("c", 12))),
+        1L, sink, "doc_id", "text", shufflePartitions = Some(5))
+      GraftSql.waitForListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(keptIds(sink) == Set(1L, 2L, 4L))
+    assert(callerWidths.asScala.nonEmpty && callerWidths.asScala.forall(_ == "3"),
+      s"the batch's session ran under the body's width: ${callerWidths.asScala.toSeq}")
+    // post-shuffle stages run at the width, bar Dedup.spreadDf's explicit
+    // repartition to the core count
+    val widths = shuffleStageTasks.asScala.toSet
+    assert(widths.contains(5) && widths.subsetOf(Set(5, spark.sparkContext.defaultParallelism)),
+      s"shuffle stages ran at $widths, width 5")
+    assert(caller.conf.get(Shuffle) == "3")
   }
 }
