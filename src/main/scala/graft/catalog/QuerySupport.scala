@@ -80,10 +80,13 @@ private[graft] object QuerySupport {
   /** The one /tmp-path key scheme for per-dir sinks and caches. Folds a
     * cheap content fingerprint (per-file name+length+mtime) into the key so
     * regenerated source data can never be served from a stale fixture cache
-    * or collide with a checkpoint built against the old data.
+    * or collide with a checkpoint built against the old data. Keys begin
+    * with a letter: Spark's file listing hides names starting with `_` or
+    * `.`, and warns "All paths were ignored" on reading such a root.
     */
   private[graft] def tmpKey(dir: String): String = {
-    val base = dir.replaceAll("[^a-zA-Z0-9]", "_")
+    val path = dir.replaceAll("[^a-zA-Z0-9]", "_").dropWhile(_ == '_')
+    val base = if (path.headOption.exists(_.isLetter)) path else "d" + path
     val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
     val fp = files.filter(_.isFile).sortBy(_.getName)
       .foldLeft(1125899906842597L) { (h, f) =>

@@ -2,7 +2,7 @@ package graft.log
 
 import java.time.LocalDate
 
-/** Compiled fast path for the all-numeric subset of date/time patterns —
+/** Compiled fast path for the fixed-width subset of date/time patterns —
   * the formats log files actually use (`yyyy-MM-dd HH:mm:ss`, `yyMMdd`,
   * `HH:mm:ss`, …). The scan profile (dev/SCAN_PROFILE.md) showed type
   * coercion at ~50% of per-line parse cost, nearly all of it
@@ -12,9 +12,11 @@ import java.time.LocalDate
   * no allocation, ~10x cheaper per value.
   *
   * Supported tokens: `yyyy`, `yy` (reduced, 2000-2099 — matches
-  * `DateTimeFormatter`'s default base), `MM`, `dd`, `HH`, `mm`, `ss`,
-  * plus non-letter literal separators. Anything else (variable-width
-  * fields, fractions, zones, month names, quoted text) →
+  * `DateTimeFormatter`'s default base), `MM`, `MMM` (the `Locale.US`
+  * short month names, case-sensitive, as the formatter parses them),
+  * `dd`, `HH`, `mm`, `ss`, `Z` (a sign and four digits, the Apache
+  * `+0000`), plus non-letter literal separators. Anything else
+  * (variable-width fields, fractions, other zone letters, quoted text) →
   * [[FastDateTime.compile]] returns None and the caller keeps the
   * formatter path. Semantics replicate the formatter under its default
   * SMART resolver, pinned by a differential property spec:
@@ -26,6 +28,11 @@ import java.time.LocalDate
   *     time-of-day requires at least the hour field
   *   - hour 24 with zero minutes/seconds is next-day midnight (the
   *     carry lands in the date; a bare time drops it), else invalid
+  *   - `Z`'s offset is validated (hours <= 23, minutes <= 59, and — only
+  *     when the pattern has both date and time, where the formatter
+  *     resolves an instant — magnitude <= 18:00) and then ignored: every
+  *     conversion keeps the wall clock, as the formatter path does
+  *     (TIMESTAMP is the wall clock under pinned UTC)
   * Invalid input throws (any exception — the reader's error routing
   * catches all), matching the formatter's throw-on-invalid contract.
   *
@@ -102,6 +109,17 @@ private[log] final class FastDateTime private (
         case Second =>
           sec = digits(s, pos, 2); pos += 2
           if (sec > 59) fail(s)
+        case MonthName =>
+          mo = 1
+          while (mo <= 12 && !s.startsWith(MonthNames(mo - 1), pos)) mo += 1
+          if (mo > 12) fail(s)
+          pos += 3
+        case Offset =>
+          if (pos >= s.length || (s.charAt(pos) != '+' && s.charAt(pos) != '-')) fail(s)
+          val oh = digits(s, pos + 1, 2)
+          val om = digits(s, pos + 3, 2)
+          if (om > 59 || oh > 23 || (hasDate && hasTime && oh * 60 + om > 18 * 60)) fail(s)
+          pos += 5
       }
       i += 1
     }
@@ -153,6 +171,16 @@ private[log] object FastDateTime {
   private final val Hour = 5
   private final val Minute = 6
   private final val Second = 7
+  private final val MonthName = 8
+  private final val Offset = 9
+
+  /** The formatter's `MMM` texts (`Locale.US`, parsed case-sensitively);
+    * null when any is not three characters, so `MMM` keeps the formatter. */
+  private val MonthNames: Array[String] = {
+    val names = java.time.Month.values.map(
+      _.getDisplayName(java.time.format.TextStyle.SHORT, java.util.Locale.US))
+    if (names.forall(_.length == 3)) names else null
+  }
 
   private def lastDayOfMonth(y: Int, mo: Int): Int = mo match {
     case 2 => if (java.time.Year.isLeap(y.toLong)) 29 else 28
@@ -161,7 +189,7 @@ private[log] object FastDateTime {
   }
 
   /** Compile `pattern`, or None when any construct falls outside the
-    * fixed-width numeric subset (caller keeps the formatter). */
+    * fixed-width subset (caller keeps the formatter). */
   def compile(pattern: String): Option[FastDateTime] = {
     val ops = scala.collection.mutable.ArrayBuffer.empty[Int]
     var hasDate = false
@@ -178,10 +206,12 @@ private[log] object FastDateTime {
           case ('y', 4) => hasDate = true; Year4 << 16
           case ('y', 2) => hasDate = true; Year2 << 16
           case ('M', 2) => Month << 16
+          case ('M', 3) if MonthNames != null => MonthName << 16
           case ('d', 2) => Day << 16
           case ('H', 2) => hasHour = true; hasTime = true; Hour << 16
           case ('m', 2) => hasTime = true; Minute << 16
           case ('s', 2) => hasTime = true; Second << 16
+          case ('Z', 1) => Offset << 16
           case _ => return None // variable width / unsupported letter
         }
         ops += op
@@ -195,7 +225,7 @@ private[log] object FastDateTime {
     }
     // a date needs all of y/M/d; time fields without an hour can't
     // resolve a LocalTime — both fall back rather than guess
-    val months = ops.count(o => (o >>> 16) == Month)
+    val months = ops.count(o => (o >>> 16) == Month || (o >>> 16) == MonthName)
     val days = ops.count(o => (o >>> 16) == Day)
     val years = ops.count(o => (o >>> 16) == Year4 || (o >>> 16) == Year2)
     val dateComplete = years == 1 && months == 1 && days == 1
@@ -204,7 +234,7 @@ private[log] object FastDateTime {
     if (hasTime && !hasHour) return None
     // duplicate time fields (e.g. "HHHH" split) can't happen per-run above;
     // but reject duplicated fields across the pattern for safety
-    val dups = Seq(Hour, Minute, Second).exists(k => ops.count(o => (o >>> 16) == k) > 1)
+    val dups = Seq(Hour, Minute, Second, Offset).exists(k => ops.count(o => (o >>> 16) == k) > 1)
     if (dups) return None
     Some(new FastDateTime(ops.toArray, dateComplete, hasTime))
   }

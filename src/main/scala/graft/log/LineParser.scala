@@ -1,9 +1,12 @@
 package graft.log
 
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.time.{LocalDate, LocalDateTime, LocalTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import java.time.temporal.TemporalQueries
 import java.util.Locale
+
+import scala.annotation.switch
 
 import org.apache.spark.SparkException
 import org.apache.spark.sql.catalyst.InternalRow
@@ -29,6 +32,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * a line dropped under `select(*)` must also be dropped under `count(*)`,
   * so malformedness cannot depend on projection.
   *
+  * Two matchers, one result: when the pattern compiles to a [[LineKernel]]
+  * and no step budget is engaged, an ASCII line is matched over its bytes
+  * and its fields are sliced out of them ([[parseUtf8]] takes the framed
+  * bytes undecoded); every other line runs `java.util.regex` on the
+  * decoded `String`.
+  *
   * `filters` must each pass [[LineParser.supportedFilter]] — the ScanBuilder
   * only claims those, and claiming means Catalyst removes its own copy, so
   * evaluation here must match Catalyst semantics exactly (null compare =
@@ -38,29 +47,30 @@ final class LineParser(
     opts: LogOptions,
     required: StructType,
     filters: Seq[Filter] = Nil) extends Serializable {
+  import LineParser._
 
   // every filter-referenced column gets a slot in the `fvals` buffer,
   // filled during conversion (cheaper than re-reading the InternalRow)
   private val filterSlotOf: Map[String, Int] =
     filters.flatMap(_.references).distinct.zipWithIndex.toMap
 
-  // (requiredRowOrdinal, captureGroupIndex(1-based), dataTypeName, filterSlot|-1)
-  private val fieldSlots: Array[(Int, Int, String, Int)] =
-    required.fields.iterator.zipWithIndex.collect {
+  // the fields a matched line converts: the required ones (in row order),
+  // then declared fields NOT in `required` that must still be converted
+  // (ordinal -1) — pushed filters may reference them; DROPMALFORMED
+  // validates all of them
+  private val slots: Array[Slot] = {
+    val inRequired = required.fieldNames.toSet
+    val req = required.fields.iterator.zipWithIndex.collect {
       case (f, ord) if f.name != LogOptions.UnmatchedCol =>
         val gi = opts.fieldNames.indexOf(f.name)
         require(gi >= 0, s"[log] required column '${f.name}' not in fieldNames")
-        (ord, gi + 1, opts.dataTypes(gi), filterSlotOf.getOrElse(f.name, -1))
+        new Slot(ord, gi + 1, opts.dataTypes(gi), filterSlotOf.getOrElse(f.name, -1))
     }.toArray
-
-  // declared fields NOT in `required` that must still be converted: pushed
-  // filters may reference them; DROPMALFORMED validates all of them
-  private val extraSlots: Array[(Int, String, Int)] = {
-    val inRequired = required.fieldNames.toSet
-    opts.fieldNames.zipWithIndex.collect {
+    val extra = opts.fieldNames.zipWithIndex.collect {
       case (n, gi) if !inRequired(n) && (opts.dropMalformed || filterSlotOf.contains(n)) =>
-        (gi + 1, opts.dataTypes(gi), filterSlotOf.getOrElse(n, -1))
-    }.toArray
+        new Slot(-1, gi + 1, opts.dataTypes(gi), filterSlotOf.getOrElse(n, -1))
+    }
+    req ++ extra
   }
 
   private val unmatchedOrdinal: Int =
@@ -73,8 +83,8 @@ final class LineParser(
   // A count(*)-style scan in plain PERMISSIVE mode needs no regex work at
   // all: every non-blank line is exactly one row regardless of match. Any
   // strict mode or pushed filter disables the shortcut.
-  private val needsMatch = fieldSlots.nonEmpty || extraSlots.nonEmpty ||
-    unmatchedOrdinal >= 0 || opts.failFast || opts.dropMalformed || filters.nonEmpty
+  private val needsMatch = slots.nonEmpty || unmatchedOrdinal >= 0 ||
+    opts.failFast || opts.dropMalformed || filters.nonEmpty
 
   @transient private lazy val matcher = opts.compiledPattern.matcher("")
   // regexMaxSteps kill switch (LineParser.findBudgeted): one reusable
@@ -92,13 +102,28 @@ final class LineParser(
   private val litPrefix: Option[(String, Boolean)] = LineParser.literalPrefix(opts.pattern)
   private val lit: String = litPrefix.map(_._1).orNull
   private val litAnchored: Boolean = litPrefix.exists(_._2)
+  // the byte path (LineKernel) for ASCII lines; null = the pattern is
+  // outside the kernel's subset or a step budget is engaged, and every
+  // line takes java.util.regex
+  @transient private lazy val kernel: LineKernel =
+    if (maxSteps > 0L) null else LineKernel.compile(opts.pattern).orNull
+  @transient private lazy val spans = new Array[Int](2 * kernel.groupCount)
+  // the line being routed: kb[kOff, kOff + kLen) on the byte path (bytes
+  // only valid during the call, so values copy out of them), else `text`
+  @transient private var viaKernel = false
+  @transient private var kb: Array[Byte] = _
+  @transient private var kOff = 0
+  @transient private var kLen = 0
+  @transient private var text: String = _
+  // parse(String)'s ASCII copy, grown on demand
+  @transient private var scratch: Array[Byte] = _
   @transient private lazy val dateFmt: DateTimeFormatter =
     DateTimeFormatter.ofPattern(opts.dateFormat, Locale.US)
   @transient private lazy val timeFmt: DateTimeFormatter =
     DateTimeFormatter.ofPattern(opts.timeFormat, Locale.US)
-  // compiled fast path for all-numeric formats (~10x cheaper than the
-  // formatter — dev/SCAN_PROFILE.md); null = format outside the subset,
-  // keep the formatter. One instance per parser: parse scratch is
+  // compiled fast path for the formats FastDateTime covers (~10x cheaper
+  // than the formatter — dev/SCAN_PROFILE.md); null = format outside the
+  // subset, keep the formatter. One instance per parser: parse scratch is
   // single-threaded like `matcher`. FastDateTimeSpec pins differential
   // equivalence against the formatter path.
   @transient private lazy val fastDate: FastDateTime =
@@ -123,72 +148,89 @@ final class LineParser(
 
   /** Parse one non-blank line into the required row; `null` means the line
     * is not emitted (DROPMALFORMED or a pushed filter). Throws in FAILFAST
-    * mode on unmatched lines or unconvertible values.
+    * mode on unmatched lines or unconvertible values. An ASCII line takes
+    * the byte path through a per-parser copy.
     */
   def parse(line: String): InternalRow = {
-    val row = new GenericInternalRow(numFields)
     // count(*) shortcut never evaluates the regex — matched/unmatched are
     // honestly unmeasured (zero) on a fully-pruned scan
-    if (!needsMatch) return row
-    var s = 0
-    while (s < fvals.length) { fvals(s) = null; s += 1 }
+    if (!needsMatch) return new GenericInternalRow(numFields)
+    if (kernel != null) {
+      val n = line.length
+      if (scratch == null || scratch.length < n) scratch = new Array[Byte](math.max(n, 256))
+      var i = 0
+      while (i < n && line.charAt(i) < 0x80) { scratch(i) = line.charAt(i).toByte; i += 1 }
+      if (i == n) return parseAscii(scratch, 0, n)
+    }
+    parseRegex(line)
+  }
+
+  /** [[parse]] for a UTF-8 line framed in `b[off, off + len)`: an ASCII
+    * line goes to the byte path undecoded; any other line is decoded
+    * exactly as Hadoop's `Text.toString` decodes it. `b` may be reused by
+    * the caller once this returns. */
+  def parseUtf8(b: Array[Byte], off: Int, len: Int): InternalRow = {
+    if (!needsMatch) return new GenericInternalRow(numFields)
+    if (kernel != null && isAscii(b, off, len)) parseAscii(b, off, len)
+    else parseRegex(org.apache.hadoop.io.Text.decode(b, off, len))
+  }
+
+  private def parseAscii(b: Array[Byte], off: Int, len: Int): InternalRow = {
+    viaKernel = true; kb = b; kOff = off; kLen = len
+    route(kernel.find(b, off, len, spans))
+  }
+
+  private def parseRegex(line: String): InternalRow = {
+    viaKernel = false; text = line
     val mightMatch = lit == null ||
       (if (litAnchored) line.startsWith(lit) else line.contains(lit))
     // unanchored find(), LRR:225 — do not anchor
-    if (mightMatch && LineParser.findBudgeted(matcher, budgeted, line, maxSteps,
-        s"'${opts.pattern}'")) {
+    route(mightMatch && LineParser.findBudgeted(matcher, budgeted, line, maxSteps,
+      s"'${opts.pattern}'"))
+  }
+
+  /** The current line's row, given whether the pattern matched it. */
+  private def route(matched: Boolean): InternalRow = {
+    val row = new GenericInternalRow(numFields)
+    var s = 0
+    while (s < fvals.length) { fvals(s) = null; s += 1 }
+    if (matched) {
       nMatched += 1
       var i = 0
-      while (i < fieldSlots.length) {
-        val (ord, group, dt, fslot) = fieldSlots(i)
-        val raw = matcher.group(group)
-        // Divergence (SURVEY.md §7.4): unparticipating optional group → NULL,
-        // not "" (reference: LRR:234-236 coerces to "" which crashes numeric
-        // parsing fatally even in tolerant mode). NULL is not malformed.
-        if (raw != null) {
-          try {
-            val v = convert(raw, dt)
-            row.update(ord, v)
-            if (fslot >= 0) fvals(fslot) = v
-          } catch {
-            case e: Exception if opts.failFast =>
-              throw new SparkException(
-                s"[log] FAILFAST: cannot convert '$raw' to $dt in line: $line", e)
-            case _: Exception if opts.dropMalformed => nDropped += 1; return null
-            case _: Exception => () // tolerant: NULL, LRR:249-255 semantics
+      while (i < slots.length) {
+        val sl = slots(i)
+        try {
+          // Divergence (SURVEY.md §7.4): unparticipating optional group →
+          // NULL, not "" (reference: LRR:234-236 coerces to "" which
+          // crashes numeric parsing fatally even in tolerant mode). NULL
+          // is not malformed.
+          val v = value(sl)
+          if (v != null) {
+            if (sl.ord >= 0) row.update(sl.ord, v)
+            if (sl.fslot >= 0) fvals(sl.fslot) = v
           }
+        } catch {
+          case e: Exception if opts.failFast =>
+            throw new SparkException(
+              s"[log] FAILFAST: cannot convert '${raw(sl.group)}' to ${sl.dt} in line: $lineText", e)
+          case _: Exception if opts.dropMalformed => nDropped += 1; return null
+          case _: Exception => () // tolerant: NULL, LRR:249-255 semantics
         }
         i += 1
       }
-      var j = 0
-      while (j < extraSlots.length) {
-        val (group, dt, fslot) = extraSlots(j)
-        val raw = matcher.group(group)
-        if (raw != null) {
-          try {
-            val v = convert(raw, dt)
-            if (fslot >= 0) fvals(fslot) = v
-          } catch {
-            case e: Exception if opts.failFast =>
-              throw new SparkException(
-                s"[log] FAILFAST: cannot convert '$raw' to $dt in line: $line", e)
-            case _: Exception if opts.dropMalformed => nDropped += 1; return null
-            case _: Exception => ()
-          }
-        }
-        j += 1
-      }
     } else if (opts.failFast) {
-      throw new SparkException(s"[log] FAILFAST: line does not match pattern '${opts.pattern}': $line") // LRR:284-285
+      throw new SparkException(s"[log] FAILFAST: line does not match pattern '${opts.pattern}': $lineText") // LRR:284-285
     } else if (opts.dropMalformed) {
       nUnmatched += 1; nDropped += 1
       return null
     } else {
       nUnmatched += 1
-      if (unmatchedOrdinal >= 0) {
-        row.update(unmatchedOrdinal, UTF8String.fromString(line)) // LRR:287-290
+      if (unmatchedOrdinal >= 0 || unmatchedFilterSlot >= 0) {
+        val u = // LRR:287-290
+          if (viaKernel) utf8Copy(kb, kOff, kLen) else UTF8String.fromString(text)
+        if (unmatchedOrdinal >= 0) row.update(unmatchedOrdinal, u)
+        if (unmatchedFilterSlot >= 0) fvals(unmatchedFilterSlot) = u
       }
-      if (unmatchedFilterSlot >= 0) fvals(unmatchedFilterSlot) = UTF8String.fromString(line)
     }
     // matched and unmatched rows alike run the pushed predicates — exactly
     // the rows Catalyst's own Filter above the scan would have seen
@@ -200,15 +242,38 @@ final class LineParser(
     row
   }
 
+  /** The matched group's text (error messages). */
+  private def raw(group: Int): String =
+    if (viaKernel) {
+      val s = spans(2 * group - 2)
+      new String(kb, s, spans(2 * group - 1) - s, ISO_8859_1)
+    } else matcher.group(group)
+
+  private def lineText: String =
+    if (viaKernel) new String(kb, kOff, kLen, ISO_8859_1) else text
+
+  /** The slot's converted value; null for an unparticipating group. A
+    * kernel group always participates: its groups are never optional. */
+  private def value(sl: Slot): Any =
+    if (viaKernel) {
+      val s = spans(2 * sl.group - 2)
+      val len = spans(2 * sl.group - 1) - s
+      if (sl.kind == KVarchar) utf8Copy(kb, s, len)
+      else convert(new String(kb, s, len, ISO_8859_1), sl.kind)
+    } else {
+      val r = matcher.group(sl.group)
+      if (r == null) null else convert(r, sl.kind)
+    }
+
   /** String → Spark internal value for one capture group (SURVEY.md §1.3). */
-  private def convert(raw: String, dt: String): Any = dt match {
-    case "INT" | "INTEGER" => java.lang.Integer.valueOf(raw) // LRR:238-239
-    case "DOUBLE" | "FLOAT8" => java.lang.Double.valueOf(raw) // LRR:240-241
-    case "FLOAT" | "FLOAT4" => java.lang.Float.valueOf(raw) // LRR:242-243
-    case "DATE" => // LRR:244-255; UTC pinned (reference: JVM-default tz)
+  private def convert(raw: String, kind: Int): Any = (kind: @switch) match {
+    case KInt => java.lang.Integer.valueOf(raw) // LRR:238-239
+    case KDouble => java.lang.Double.valueOf(raw) // LRR:240-241
+    case KFloat => java.lang.Float.valueOf(raw) // LRR:242-243
+    case KDate => // LRR:244-255; UTC pinned (reference: JVM-default tz)
       if (fastDate != null) java.lang.Integer.valueOf(fastDate.parseEpochDay(raw))
       else java.lang.Integer.valueOf(LocalDate.from(dateFmt.parse(raw)).toEpochDay.toInt)
-    case "TIMESTAMP" => // LRR:256-267 — same formatter as DATE (no separate timestamp format)
+    case KTimestamp => // LRR:256-267 — same formatter as DATE (no separate timestamp format)
       if (fastDate != null) java.lang.Long.valueOf(fastDate.parseMicros(raw))
       else {
         val ta = dateFmt.parse(raw)
@@ -218,7 +283,7 @@ final class LineParser(
         val inst = LocalDateTime.of(d, t).toInstant(ZoneOffset.UTC)
         java.lang.Long.valueOf(inst.getEpochSecond * 1000000L + inst.getNano / 1000)
       }
-    case "TIME" => // LRR:268-275: millis-of-day; honors timeFormat (reference bug LRR:324 not replicated)
+    case KTime => // LRR:268-275: millis-of-day; honors timeFormat (reference bug LRR:324 not replicated)
       if (fastTime != null) java.lang.Integer.valueOf(fastTime.parseMillisOfDay(raw))
       else {
         val t = LocalTime.from(timeFmt.parse(raw))
@@ -229,6 +294,46 @@ final class LineParser(
 }
 
 object LineParser {
+
+  // conversion kinds, fixed once per slot from the declared type name
+  private final val KVarchar = 0
+  private final val KInt = 1
+  private final val KDouble = 2
+  private final val KFloat = 3
+  private final val KDate = 4
+  private final val KTimestamp = 5
+  private final val KTime = 6
+
+  /** One field a matched line converts: row ordinal (-1 = converted for a
+    * filter or DROPMALFORMED only), 1-based capture group, declared type,
+    * and `fvals` slot (-1 = no filter reads it). */
+  private final class Slot(val ord: Int, val group: Int, val dt: String, val fslot: Int)
+      extends Serializable {
+    val kind: Int = dt match {
+      case "INT" | "INTEGER"   => KInt
+      case "DOUBLE" | "FLOAT8" => KDouble
+      case "FLOAT" | "FLOAT4"  => KFloat
+      case "DATE"              => KDate
+      case "TIMESTAMP"         => KTimestamp
+      case "TIME"              => KTime
+      case _                   => KVarchar
+    }
+  }
+
+  /** A `UTF8String` of its own copy of `b[off, off + len)` (`fromBytes`
+    * with an offset would alias `b`, which framing and callers reuse). */
+  private[log] def utf8Copy(b: Array[Byte], off: Int, len: Int): UTF8String =
+    UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, off, off + len))
+
+  /** Every byte of `b[off, off + len)` below 0x80 (one OR-reduction, no
+    * early exit, so the loop vectorizes). */
+  private[log] def isAscii(b: Array[Byte], off: Int, len: Int): Boolean = {
+    var acc = 0
+    var i = off
+    val end = off + len
+    while (i < end) { acc |= b(i); i += 1 }
+    acc >= 0
+  }
 
   /** Whether a Catalyst source filter can be fully evaluated in the reader.
     * Conservative by design: comparison/IN only on INT/DOUBLE/FLOAT/string
@@ -359,7 +464,7 @@ object LineParser {
     * (so overlap checks can probe them in addition to the fixed category
     * representatives). `null` stands for "couldn't model — treat as
     * overlapping", the conservative direction. */
-  private final class Cls(val test: Char => Boolean, val chars: List[Char])
+  private[log] final class Cls(val test: Char => Boolean, val chars: List[Char])
 
   private def litCls(c: Char) = new Cls(x => x == c, c :: Nil)
   private def isWordCh(c: Char) =
@@ -384,7 +489,7 @@ object LineParser {
   }
 
   /** `\d \D \s \S \w \W` and the escape literals; null for anything else. */
-  private def escCls(c: Char): Cls = c match {
+  private[log] def escCls(c: Char): Cls = c match {
     case 'd' => new Cls(ch => ch >= '0' && ch <= '9', Nil)
     case 'D' => new Cls(ch => !(ch >= '0' && ch <= '9'), Nil)
     case 's' => new Cls(isSpaceCh, Nil)
@@ -406,6 +511,121 @@ object LineParser {
 
   private def clsOverlap(a: Cls, b: Cls): Boolean =
     (ClsReps ++ a.chars ++ b.chars).exists(c => a.test(c) && b.test(c))
+
+  /** Parse the character class starting at `start` (`pattern.charAt(start)
+    * == '['`): returns (model-or-null, index past the closing `]`). The
+    * model is exact where it is not null; nested classes, intersections
+    * and range bounds it cannot read give null. Shared by [[riskyPattern]]
+    * and [[LineKernel]]'s compiler, the one pattern parser of the package. */
+  private[log] def parseCharClass(pattern: String, start: Int): (Cls, Int) = {
+    val n = pattern.length
+    var j = start + 1
+    var negated = false
+    if (j < n && pattern.charAt(j) == '^') { negated = true; j += 1 }
+    var items = List.empty[Cls]
+    var lits = List.empty[Char]
+    var ok = true
+    var first = true
+    while (j < n && (pattern.charAt(j) != ']' || first)) {
+      first = false
+      val item: Cls = pattern.charAt(j) match {
+        case '\\' if j + 1 < n =>
+          val esc = pattern.charAt(j + 1); j += 2
+          if (j + 1 < n && pattern.charAt(j) == '-' && pattern.charAt(j + 1) != ']') {
+            // the escape is the LOWER bound of a range ([\t-z]): model it
+            // when the escape denotes one literal char. A class escape as
+            // a bound ([\d-z]) or an escaped hi bound ([\t-\\]) is
+            // unmodelable here — bail conservative (under-approximating
+            // the class would be a false NEGATIVE for the chain rule).
+            escLit(esc) match {
+              case Some(lo) =>
+                val hi = pattern.charAt(j + 1) match {
+                  case '\\' => ok = false; j += 2; ' ' // \-escaped hi bound — bail
+                  case h    => j += 2; h
+                }
+                if (ok) { lits = lo :: hi :: lits; new Cls(x => x >= lo && x <= hi, lo :: hi :: Nil) }
+                else null
+              case None => ok = false; null
+            }
+          } else escCls(esc)
+        case '[' => ok = false; j += 1; null // nested class / POSIX — bail
+        case '&' if j + 1 < n && pattern.charAt(j + 1) == '&' =>
+          ok = false; j += 2; null // intersection — bail
+        case c =>
+          j += 1
+          if (j + 1 < n && pattern.charAt(j) == '-' && pattern.charAt(j + 1) != ']') {
+            // range c-d (a '-' before ']' is a literal, handled next loop)
+            val hi = pattern.charAt(j + 1) match {
+              case '\\' => ok = false; j += 2; ' ' // \-escaped hi bound — bail
+              case h    => j += 2; h
+            }
+            if (ok) { lits = c :: hi :: lits; new Cls(x => x >= c && x <= hi, c :: hi :: Nil) }
+            else null
+          } else { lits = c :: lits; litCls(c) }
+      }
+      if (item == null) ok = false else items = item :: items
+    }
+    if (j >= n) return (null, n) // unterminated — bail conservative
+    j += 1 // past ']'
+    if (!ok) return (null, j)
+    val within = items
+    val pos = new Cls(c => within.exists(_.test(c)), lits ++ within.flatMap(_.chars))
+    (if (negated) new Cls(c => !pos.test(c), pos.chars) else pos, j)
+  }
+
+  /** A quantifier: `min`..`max` repetitions (`max` -1 = unbounded; counts
+    * past nine digits saturate at `Int.MaxValue`), `greedy` = no `+`
+    * (possessive) or `?` (reluctant) modifier, and `end` = the index past
+    * it. `counting` = it can repeat a VARIABLE number of times and
+    * backtrack: non-possessive `*` / `+` / `{m,}` / `{m,n}` with n≠m
+    * (probed: `\S{1,}a`×8 0.97 s, `\S{0,99}a`×8 5.3 s at n=40, same class
+    * as `+`). `?` and fixed `{m}` cannot multiply ambiguity; a possessive
+    * modifier cannot backtrack at all. */
+  private[log] final case class Quant(min: Int, max: Int, greedy: Boolean, counting: Boolean, end: Int)
+
+  /** The quantifier at `j`, or null when none starts there (a `{` not
+    * followed by `digits}` / `digits,digits}` is not one). */
+  private[log] def parseQuant(pattern: String, j: Int): Quant = {
+    val n = pattern.length
+    if (j >= n) return null
+    def num(s: String): Int = {
+      val t = s.dropWhile(_ == '0')
+      if (t.isEmpty) 0 else if (t.length > 9) Int.MaxValue else t.toInt
+    }
+    var min = 0
+    var max = -1
+    var counting = false
+    var k = j
+    pattern.charAt(j) match {
+      case '*' => counting = true; k += 1
+      case '+' => counting = true; min = 1; k += 1
+      case '?' => max = 1; k += 1
+      case '{' =>
+        var m = j + 1
+        while (m < n && pattern.charAt(m).isDigit) m += 1
+        if (m == j + 1) return null // literal '{'
+        val lo = pattern.substring(j + 1, m)
+        min = num(lo)
+        if (m < n && pattern.charAt(m) == ',') {
+          m += 1
+          val hiStart = m
+          while (m < n && pattern.charAt(m).isDigit) m += 1
+          if (m >= n || pattern.charAt(m) != '}') return null
+          val hi = pattern.substring(hiStart, m)
+          counting = hi.isEmpty || hi != lo // {m,} unbounded, or n≠m choice
+          max = if (hi.isEmpty) -1 else num(hi)
+          k = m + 1
+        } else if (m < n && pattern.charAt(m) == '}') {
+          max = min // fixed {m}: no choice, not counting
+          k = m + 1
+        } else return null
+      case _ => return null
+    }
+    var greedy = true
+    if (k < n && pattern.charAt(k) == '+') { counting = false; greedy = false; k += 1 } // possessive
+    else if (k < n && pattern.charAt(k) == '?') { greedy = false; k += 1 } // reluctant still backtracks
+    Quant(min, max, greedy, counting, k)
+  }
 
   /** Static detector for the structural prerequisites of catastrophic
     * (exponential or high-degree polynomial) backtracking. Conservative in
@@ -450,102 +670,6 @@ object LineParser {
       val c = pattern.charAt(j)
       c == '*' || c == '+' || (c == '{' && j + 1 < n && pattern.charAt(j + 1).isDigit)
     }
-    // Parse the character class starting at `start` (pattern.charAt(start)
-    // == '['): returns (model-or-null, index past the closing ']').
-    def parseCharClass(start: Int): (Cls, Int) = {
-      var j = start + 1
-      var negated = false
-      if (j < n && pattern.charAt(j) == '^') { negated = true; j += 1 }
-      var items = List.empty[Cls]
-      var lits = List.empty[Char]
-      var ok = true
-      var first = true
-      while (j < n && (pattern.charAt(j) != ']' || first)) {
-        first = false
-        val item: Cls = pattern.charAt(j) match {
-          case '\\' if j + 1 < n =>
-            val esc = pattern.charAt(j + 1); j += 2
-            if (j + 1 < n && pattern.charAt(j) == '-' && pattern.charAt(j + 1) != ']') {
-              // the escape is the LOWER bound of a range ([\t-z]): model it
-              // when the escape denotes one literal char. A class escape as
-              // a bound ([\d-z]) or an escaped hi bound ([\t-\\]) is
-              // unmodelable here — bail conservative (under-approximating
-              // the class would be a false NEGATIVE for the chain rule).
-              escLit(esc) match {
-                case Some(lo) =>
-                  val hi = pattern.charAt(j + 1) match {
-                    case '\\' => ok = false; j += 2; ' ' // \-escaped hi bound — bail
-                    case h    => j += 2; h
-                  }
-                  if (ok) { lits = lo :: hi :: lits; new Cls(x => x >= lo && x <= hi, lo :: hi :: Nil) }
-                  else null
-                case None => ok = false; null
-              }
-            } else escCls(esc)
-          case '[' => ok = false; j += 1; null // nested class / POSIX — bail
-          case '&' if j + 1 < n && pattern.charAt(j + 1) == '&' =>
-            ok = false; j += 2; null // intersection — bail
-          case c =>
-            j += 1
-            if (j + 1 < n && pattern.charAt(j) == '-' && pattern.charAt(j + 1) != ']') {
-              // range c-d (a '-' before ']' is a literal, handled next loop)
-              val hi = pattern.charAt(j + 1) match {
-                case '\\' => ok = false; j += 2; ' ' // \-escaped hi bound — bail
-                case h    => j += 2; h
-              }
-              if (ok) { lits = c :: hi :: lits; new Cls(x => x >= c && x <= hi, c :: hi :: Nil) }
-              else null
-            } else { lits = c :: lits; litCls(c) }
-        }
-        if (item == null) ok = false else items = item :: items
-      }
-      if (j >= n) return (null, n) // unterminated — bail conservative
-      j += 1 // past ']'
-      if (!ok) return (null, j)
-      val within = items
-      val pos = new Cls(c => within.exists(_.test(c)), lits ++ within.flatMap(_.chars))
-      (if (negated) new Cls(c => !pos.test(c), pos.chars) else pos, j)
-    }
-    // Quantifier at `j` → (present, counting, minZero, end-past-modifier).
-    // `counting` = can repeat a VARIABLE number of times and backtrack —
-    // non-possessive `*` / `+` / `{m,}` / `{m,n}` with n≠m (probed:
-    // `\S{1,}a`×8 0.97 s, `\S{0,99}a`×8 5.3 s at n=40, same class as `+`).
-    // `?` and fixed `{m}` cannot multiply ambiguity; a possessive modifier
-    // cannot backtrack at all. `minZero` = the quantified token can match
-    // empty (skippable, for the successor scan).
-    def parseQuant(j: Int): (Boolean, Boolean, Boolean, Int) = {
-      if (j >= n) return (false, false, false, j)
-      var counting = false
-      var minZero = false
-      var k = j
-      pattern.charAt(j) match {
-        case '*' => counting = true; minZero = true; k += 1
-        case '+' => counting = true; k += 1
-        case '?' => minZero = true; k += 1
-        case '{' =>
-          var m = j + 1
-          while (m < n && pattern.charAt(m).isDigit) m += 1
-          if (m == j + 1) return (false, false, false, j) // literal '{'
-          val lo = pattern.substring(j + 1, m)
-          if (m < n && pattern.charAt(m) == ',') {
-            m += 1
-            val hiStart = m
-            while (m < n && pattern.charAt(m).isDigit) m += 1
-            if (m >= n || pattern.charAt(m) != '}') return (false, false, false, j)
-            val hi = pattern.substring(hiStart, m)
-            counting = hi.isEmpty || hi != lo // {m,} unbounded, or n≠m choice
-            minZero = lo.forall(_ == '0')
-            k = m + 1
-          } else if (m < n && pattern.charAt(m) == '}') {
-            minZero = lo.forall(_ == '0') // fixed {m}: no choice, not counting
-            k = m + 1
-          } else return (false, false, false, j)
-        case _ => return (false, false, false, j)
-      }
-      if (k < n && pattern.charAt(k) == '+') { counting = false; k += 1 } // possessive
-      else if (k < n && pattern.charAt(k) == '?') k += 1 // reluctant still backtracks
-      (true, counting, minZero, k)
-    }
     // Does the group opening at `open` (pattern.charAt(open) == '(')
     // contain a `|` at ITS OWN top level? `(x|0)` yes; `(a(x|0))` no —
     // the inner group is examined on its own if the scan reaches it.
@@ -556,7 +680,7 @@ object LineParser {
       while (k < n) {
         pattern.charAt(k) match {
           case '\\' => k += 2
-          case '['  => k = parseCharClass(k)._2 // `|` inside a class is a literal
+          case '['  => k = parseCharClass(pattern, k)._2 // `|` inside a class is a literal
           case '('  => d += 1; k += 1
           case ')'  => d -= 1; if (d == 0) return false; k += 1
           case '|'  => if (d == 1) return true; k += 1
@@ -595,21 +719,20 @@ object LineParser {
             // one consuming token, then its quantifier
             val (tokCls, tokEnd): (Cls, Int) = pattern.charAt(j) match {
               case '.' => (DotCls, j + 1)
-              case '[' => parseCharClass(j)
+              case '[' => parseCharClass(pattern, j)
               case '\\' =>
                 if (j + 1 >= n) return true
                 val nx = pattern.charAt(j + 1)
                 if (nx.isDigit || nx == 'k') return true // backref — conservative
                 (escCls(nx), j + 2)
               case '{' =>
-                val (p, _, _, _) = parseQuant(j)
-                if (p) return true // stray quantifier — conservative
+                if (parseQuant(pattern, j) != null) return true // stray quantifier — conservative
                 (litCls('{'), j + 1)
               case ch => (litCls(ch), j + 1)
             }
             if (cls == null || tokCls == null || clsOverlap(cls, tokCls)) return true
-            val (qPresent, _, qMinZero, qEnd) = parseQuant(tokEnd)
-            if (qPresent && qMinZero) j = qEnd // skippable: look past it
+            val q = parseQuant(pattern, tokEnd)
+            if (q != null && q.min == 0) j = q.end // skippable: look past it
             else return false
         }
       }
@@ -619,11 +742,11 @@ object LineParser {
     // consume a quantifier + modifier if present, update the rule-1 body
     // flag and the rule-2 chain count, and return the next index.
     def afterAtom(cls: Cls, j: Int): Int = {
-      val (present, counting, _, end) = parseQuant(j)
-      if (!present) return j
+      val q = parseQuant(pattern, j)
+      if (q == null) return j
       if (depth >= 1) body(depth) = true
-      if (counting && (cls == null || overlapsSuccessor(cls, end))) chainQuants += 1
-      end
+      if (q.counting && (cls == null || overlapsSuccessor(cls, q.end))) chainQuants += 1
+      q.end
     }
     // Per-depth UNION of the atom classes a group's body can consume, so a
     // variably-quantified GROUP participates in the chain rule as an atom
@@ -652,7 +775,7 @@ object LineParser {
           noteAtom(cls)
           i = afterAtom(cls, i + 2)
         case '[' => // character class: quantifier chars inside are literals
-          val (cls, end) = parseCharClass(i)
+          val (cls, end) = parseCharClass(pattern, i)
           noteAtom(cls)
           i = afterAtom(cls, end)
         case '(' =>

@@ -298,9 +298,8 @@ final class LogScan(
     LogScan.matchesExtension(name, opts.extensions)
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    new LogPartitionReaderFactory(
-      opts, required, pushed, new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+    val conf = new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)
+    new LogPartitionReaderFactory(opts, required, pushed, () => conf.value)
   }
 
   /** Scan observability (Spark UI / metrics API): per-task matched vs
@@ -617,15 +616,17 @@ final case class LogInputPartition(chunks: Array[LogChunk]) extends InputPartiti
     LogScan.topHostsByBytes(chunks.iterator.flatMap(c => c.hosts.map(_ -> c.length)))
 }
 
+/** `conf` yields the Hadoop conf on the executor: shipped with each task
+  * by a batch scan, read from one broadcast by a stream. */
 final class LogPartitionReaderFactory(
     opts: LogOptions,
     required: StructType,
     pushed: Array[org.apache.spark.sql.sources.Filter],
-    conf: SerializableHadoopConf)
+    conf: () => Configuration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new LogPartitionReader(
-      partition.asInstanceOf[LogInputPartition], opts, required, pushed.toSeq, conf.value)
+      partition.asInstanceOf[LogInputPartition], opts, required, pushed.toSeq, conf())
 }
 
 /** One partition (one or more file chunks) → rows. Uses Hadoop's
@@ -676,10 +677,13 @@ final class LogPartitionReader(
 
   private val parser = new LineParser(opts, dataRequired, pushed)
   // byte→text decoding (the `encoding` option): Hadoop's Text assumes
-  // UTF-8, so any other charset decodes from the raw framed bytes. The
-  // UTF-8 path stays Text.toString (its decoder is the optimized one).
+  // UTF-8, so any other charset decodes from the raw framed bytes.
   private val charset = java.nio.charset.Charset.forName(opts.encoding)
   private val isUtf8 = charset == java.nio.charset.StandardCharsets.UTF_8
+  // single-line UTF-8 records reach the parser as their framed bytes
+  // (LineParser.parseUtf8: ASCII lines are never decoded); multi-line
+  // records and other charsets are assembled / decoded as Strings
+  private val byteLines = isUtf8 && opts.recordStartPattern.isEmpty
   // custom framing bytes (the `lineSep` option), encoded under the same
   // charset the lines decode with
   private val delimBytes: Array[Byte] = opts.lineSep.map(_.getBytes(charset)).orNull
@@ -723,9 +727,12 @@ final class LogPartitionReader(
   private final class HadoopFrames(split: FileSplit) extends Frames {
     private val rr =
       if (delimBytes != null) new LineRecordReader(delimBytes) else new LineRecordReader()
+    // a JobConf `conf` (SerializableHadoopConf's) is used as is; any other
+    // Configuration is copied whole here, once per chunk
     rr.initialize(split, new TaskAttemptContextImpl(conf, new TaskAttemptID()))
     def advance(): Boolean = rr.nextKeyValue()
     def pos: Long = rr.getCurrentKey.get()
+    def text: org.apache.hadoop.io.Text = rr.getCurrentValue
     def rawLine(): String = {
       val t = rr.getCurrentValue
       if (isUtf8) t.toString else new String(t.getBytes, 0, t.getLength, charset)
@@ -781,6 +788,7 @@ final class LogPartitionReader(
   private var chunkIdx = -1
   private var reader: Frames = _
   private var current: InternalRow = _
+  private var parsed: InternalRow = _ // parseNext's result
   // internal-typed partition values of the current chunk, one per
   // REQUIRED partition column (partOrdinals order)
   private var partVals: Array[Any] = Array.empty
@@ -850,12 +858,8 @@ final class LogPartitionReader(
     * the same regexMaxSteps budget as the field pattern — it faces the
     * same catastrophic-backtracking hazard, once per line. */
   private def startsRecord(line: String): Boolean =
-    try LineParser.findBudgeted(startMatcher, startBudget, line, startMaxSteps,
+    LineParser.findBudgeted(startMatcher, startBudget, line, startMaxSteps,
       s"'${opts.recordStartPattern.get}' (recordStartPattern)")
-    catch {
-      case e: SparkException => throw new SparkException(
-        s"${e.getMessage} (file=${part.chunks(chunkIdx).path})", e.getCause)
-    }
 
   /** Next framed record of the current chunk (single line, or assembled
     * multi-line block), null when the chunk is exhausted.
@@ -915,25 +919,47 @@ final class LogPartitionReader(
     flushBuf()
   }
 
+  /** Parse the chunk's next record into `parsed` (null for a blank line or
+    * one the parser does not emit); false when the chunk is exhausted. */
+  private def parseNext(): Boolean = {
+    parsed = null
+    if (byteLines) {
+      if (!reader.advance()) return false
+      val t = reader.asInstanceOf[HadoopFrames].text
+      val b = t.getBytes
+      val end = t.getLength
+      var off = 0
+      if (pendingBom) { // the UTF-8 BOM, EF BB BF, heading the file
+        pendingBom = false
+        if (end >= 3 && b(0) == 0xEF.toByte && b(1) == 0xBB.toByte && b(2) == 0xBF.toByte) off = 3
+      }
+      // empty-line skip, LRR:216-219: String.trim's blank (every char
+      // <= U+0020) read on bytes, where any non-ASCII byte is non-blank
+      var i = off
+      while (i < end && (b(i) & 0xff) <= 0x20) i += 1
+      if (i < end) parsed = parser.parseUtf8(b, off, end - off)
+    } else {
+      val rec = nextRecord()
+      if (rec == null) return false
+      if (rec.trim.nonEmpty) parsed = parser.parse(rec) // empty-line skip, LRR:216-219
+    }
+    true
+  }
+
   override def next(): Boolean = {
     while (reader != null || openNextChunk()) {
-      var rec = nextRecord()
-      while (rec != null) {
-        if (rec.trim.nonEmpty) { // empty-line skip, LRR:216-219
-          val row =
-            try parser.parse(rec)
-            catch {
-              case e: SparkException =>
-                throw new SparkException(
-                  s"${e.getMessage} (file=${part.chunks(chunkIdx).path})", e.getCause)
-            }
-          // null = not emitted (DROPMALFORMED or a pushed filter)
-          if (row != null) {
-            current = assemble(row)
-            return true
-          }
+      // parse and start-pattern errors name the chunk's file
+      while (
+        try parseNext()
+        catch {
+          case e: SparkException => throw new SparkException(
+            s"${e.getMessage} (file=${part.chunks(chunkIdx).path})", e.getCause)
+        }) {
+        // null = blank, or not emitted (DROPMALFORMED or a pushed filter)
+        if (parsed != null) {
+          current = assemble(parsed)
+          return true
         }
-        rec = nextRecord()
       }
       reader.close()
       reader = null
@@ -964,9 +990,11 @@ final class SerializableHadoopConf(@transient var value: Configuration) extends 
     out.defaultWriteObject()
     value.write(out)
   }
+  // a JobConf, so the reader's per-chunk TaskAttemptContextImpl uses it as
+  // is (JobContextImpl copies any other Configuration, all ~1k entries)
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
-    value = new Configuration(false)
+    value = new org.apache.hadoop.mapred.JobConf(false)
     value.readFields(in)
   }
 }

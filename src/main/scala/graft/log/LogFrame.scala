@@ -5,9 +5,10 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.{Column, DataFrame, GraftSql}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass regex extraction: match the pattern ONCE per line and return all
@@ -21,92 +22,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`LogRecordReader.java:225`).
   */
 case class ParseLogLine(child: Expression, pattern: String) extends UnaryExpression {
-  @transient private lazy val compiled = Pattern.compile(pattern)
-  private val groupCount = Pattern.compile(pattern).matcher("").groupCount()
-  // fast-reject literal (LineParser.literalPrefix, same soundness
-  // contract): skip the regex machinery when the line can't contain the
-  // pattern's required leading literal
-  private val litPrefix: Option[(String, Boolean)] = LineParser.literalPrefix(pattern)
   // the SQL surface faces the same catastrophic-backtracking hazard as
   // the scan: a structurally risky pattern runs under the regexMaxSteps
   // budget (LineParser.riskyPattern gating — benign patterns keep the
-  // plain zero-overhead path below). The budget comes from the session
-  // conf `spark.graft.log.regexMaxSteps` (captured at analysis time;
-  // 0 disables) — the expression has no per-call options surface.
+  // plain zero-overhead path). The budget comes from the session conf
+  // `spark.graft.log.regexMaxSteps` (captured at analysis time; 0
+  // disables) — the expression has no per-call options surface.
   private val maxSteps: Long = ParseLogLine.sessionMaxSteps
-  private val risky: Boolean = maxSteps > 0L && LineParser.riskyPattern(pattern)
+  // built with the expression, so a bad pattern fails at analysis
+  private val extractor = new ParseLogLine.Extractor(pattern, maxSteps)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "parse_log_line"
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.toString
-    val mightMatch = litPrefix.forall { case (lit, anchored) =>
-      if (anchored) s.startsWith(lit) else s.contains(lit)
-    }
-    if (!mightMatch) return null
-    val m = if (risky) ParseLogLine.findRisky(compiled, s, pattern, maxSteps)
-      else { val m0 = compiled.matcher(s); if (m0.find()) m0 else null }
-    if (m == null) null
-    else {
-      val arr = new Array[Any](groupCount)
-      var i = 0
-      while (i < groupCount) {
-        val g = m.group(i + 1)
-        arr(i) = if (g == null) null else UTF8String.fromString(g)
-        i += 1
-      }
-      new GenericArrayData(arr)
-    }
-  }
+  override def nullSafeEval(input: Any): Any = extractor.extract(input.asInstanceOf[UTF8String])
 
+  // the generated code calls the same method as eval
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val patternRef = ctx.addReferenceObj("pattern", compiled, classOf[Pattern].getName)
-    val n = groupCount
+    val ref = ctx.addReferenceObj("extractor", extractor, classOf[ParseLogLine.Extractor].getName)
     nullSafeCodeGen(ctx, ev, c => {
-      val m = ctx.freshName("m")
-      val arr = ctx.freshName("arr")
-      val i = ctx.freshName("i")
-      val g = ctx.freshName("g")
-      val s = ctx.freshName("s")
-      val litCheck = litPrefix.map { case (lit, anchored) =>
-        val litRef = ctx.addReferenceObj("lit", lit, "java.lang.String")
-        if (anchored) s"$s.startsWith($litRef)" else s"$s.contains($litRef)"
-      }.getOrElse("true")
-      // generation-time branch: risky patterns route through the budgeted
-      // helper; everything else keeps the inline plain matcher
-      val matchStmt =
-        if (risky) {
-          val pstrRef = ctx.addReferenceObj("pstr", pattern, "java.lang.String")
-          s"""
-             |java.util.regex.Matcher $m = null;
-             |if ($litCheck) {
-             |  $m = graft.log.ParseLogLine.findRisky($patternRef, $s, $pstrRef, ${maxSteps}L);
-             |}
-           """.stripMargin
-        } else {
-          s"""
-             |java.util.regex.Matcher $m = null;
-             |if ($litCheck) {
-             |  java.util.regex.Matcher ${m}0 = $patternRef.matcher($s);
-             |  if (${m}0.find()) $m = ${m}0;
-             |}
-           """.stripMargin
-        }
+      val r = ctx.freshName("groups")
       s"""
-         |String $s = $c.toString();
-         |$matchStmt
-         |if ($m != null) {
-         |  Object[] $arr = new Object[$n];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    String $g = $m.group($i + 1);
-         |    $arr[$i] = $g == null ? null : UTF8String.fromString($g);
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-         |} else {
-         |  ${ev.isNull} = true;
-         |}
+         |org.apache.spark.sql.catalyst.util.ArrayData $r = $ref.extract($c);
+         |if ($r != null) ${ev.value} = $r; else ${ev.isNull} = true;
        """.stripMargin
     })
   }
@@ -132,20 +71,60 @@ object ParseLogLine {
     catch { case _: NumberFormatException => LogOptions.DefaultRegexMaxSteps }
   }
 
-  /** Budgeted `find()` for structurally risky patterns, shared by the
-    * interpreted and generated eval paths: returns the matched Matcher or
-    * null, throwing the FAILFAST-style budget SparkException on a
-    * backtracking stall. Scratch objects are per CALL — risky patterns
-    * are the rare case and already regex-dominated, so the two small
-    * allocations are noise; the common (benign) path never gets here.
-    */
-  def findRisky(
-      p: Pattern, s: String, patternStr: String, maxSteps: Long): java.util.regex.Matcher = {
-    val buf = new LineParser.BudgetedChars
-    val m = p.matcher("")
-    val found = LineParser.findBudgeted(m, buf, s, maxSteps,
-      s"'$patternStr' (parse_log_line; override via SET spark.graft.log.regexMaxSteps)")
-    if (found) m else null
+  /** One match of `pattern` per line, every capture group out: the
+    * [[LineKernel]] over the bytes of an ASCII line when the pattern is in
+    * its subset and not budgeted, else `java.util.regex` on the decoded
+    * line (with the step budget when the pattern is risky). Thread-safe:
+    * per-call scratch only. */
+  final class Extractor(pattern: String, maxSteps: Long) extends Serializable {
+    private val compiled = Pattern.compile(pattern)
+    private val groupCount = compiled.matcher("").groupCount()
+    // fast-reject literal (LineParser.literalPrefix, same soundness
+    // contract): skip the regex machinery when the line can't contain the
+    // pattern's required leading literal
+    private val litPrefix: Option[(String, Boolean)] = LineParser.literalPrefix(pattern)
+    private val risky: Boolean = maxSteps > 0L && LineParser.riskyPattern(pattern)
+    private val kernel: LineKernel = if (risky) null else LineKernel.compile(pattern).orNull
+
+    /** The groups of `line`'s match, null when it does not match (a null
+      * element: an unparticipating optional group). */
+    def extract(line: UTF8String): ArrayData = {
+      if (kernel != null) {
+        val onHeap = line.getBaseObject.isInstanceOf[Array[Byte]]
+        val b = if (onHeap) line.getBaseObject.asInstanceOf[Array[Byte]] else line.getBytes
+        val off = if (onHeap) (line.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt else 0
+        val len = line.numBytes
+        if (LineParser.isAscii(b, off, len)) {
+          val spans = new Array[Int](2 * groupCount)
+          if (!kernel.find(b, off, len, spans)) return null
+          val arr = new Array[Any](groupCount)
+          var i = 0
+          while (i < groupCount) {
+            arr(i) = LineParser.utf8Copy(b, spans(2 * i), spans(2 * i + 1) - spans(2 * i))
+            i += 1
+          }
+          return new GenericArrayData(arr)
+        }
+      }
+      val s = line.toString
+      val mightMatch = litPrefix.forall { case (lit, anchored) =>
+        if (anchored) s.startsWith(lit) else s.contains(lit)
+      }
+      if (!mightMatch) return null
+      val m = compiled.matcher("")
+      val found = LineParser.findBudgeted(m, if (risky) new LineParser.BudgetedChars else null,
+        s, if (risky) maxSteps else 0L,
+        s"'$pattern' (parse_log_line; override via SET spark.graft.log.regexMaxSteps)")
+      if (!found) return null
+      val arr = new Array[Any](groupCount)
+      var i = 0
+      while (i < groupCount) {
+        val g = m.group(i + 1)
+        arr(i) = if (g == null) null else UTF8String.fromString(g)
+        i += 1
+      }
+      new GenericArrayData(arr)
+    }
   }
 }
 

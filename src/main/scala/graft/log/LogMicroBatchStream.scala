@@ -62,7 +62,10 @@ final class LogMicroBatchStream(
   import LogMicroBatchStream._
 
   private val spark = SparkSession.active
-  private val hadoopConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+  // the readers' Hadoop conf, shipped once per stream instead of with every
+  // task of every micro-batch; a JobConf, which the readers use uncopied
+  private val confBroadcast = spark.sparkContext.broadcast(new SerializableHadoopConf(
+    new org.apache.hadoop.mapred.JobConf(spark.sparkContext.hadoopConfiguration)))
   private val logDir = new Path(checkpointLocation, "graft-file-log")
 
   // In-memory view rebuilt from the persistent log at (re)start: seen file
@@ -347,10 +350,12 @@ final class LogMicroBatchStream(
       org.apache.spark.sql.GraftSql.sqlConf(spark).filesOpenCostInBytes)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new LogPartitionReaderFactory(opts, required, pushed, hadoopConf)
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val bc = confBroadcast
+    new LogPartitionReaderFactory(opts, required, pushed, () => bc.value.value)
+  }
 
-  override def stop(): Unit = ()
+  override def stop(): Unit = confBroadcast.destroy()
 
   // ------------------------------------------------------------ file log
 

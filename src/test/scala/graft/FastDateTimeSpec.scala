@@ -94,6 +94,25 @@ class FastDateTimeSpec extends AnyFunSuite {
     check("yyyyMMddHHmmss", Seq("20240615103045", "20240229235959", "20241301000000"))
   }
 
+  test("Apache timestamps: MMM month names and the Z offset, the formatter's way") {
+    check("dd/MMM/yyyy:HH:mm:ss Z", Seq(
+      "10/Oct/2000:13:55:36 -0700", "01/Mar/2024:00:00:00 +0000", "29/Feb/2024:23:59:59 -0000",
+      "15/Sep/2024:10:00:00 +1800", "15/May/2024:10:00:00 -1800", "15/Dec/2024:10:00:00 +0545",
+      // Locale.US short names, case-sensitive
+      "01/mar/2024:00:00:00 +0000", "01/MAR/2024:00:00:00 +0000", "01/Sept/2024:00:00:00 +0000",
+      "01/Foo/2024:00:00:00 +0000", "01/Ma/2024:00:00:00 +0000",
+      // the offset: a sign and four digits, minutes <= 59, magnitude <= 18:00
+      "01/Mar/2024:00:00:00 +00", "01/Mar/2024:00:00:00 +00:00", "01/Mar/2024:00:00:00 Z",
+      "01/Mar/2024:00:00:00 +0060", "01/Mar/2024:00:00:00 +1900", "01/Mar/2024:00:00:00 +1801",
+      "01/Mar/2024:00:00:00 -1801", "01/Mar/2024:00:00:00 0000", "01/Mar/2024:00:00:00 +0000 x",
+      "01/Mar/2024:00:00:00 +000a", "01/Mar/2024:00:00:00 ",
+      // SMART clamping and the hour-24 roll
+      "31/Apr/2024:10:00:00 +0000", "30/Feb/2023:10:00:00 +0000", "31/Dec/2024:24:00:00 +0000",
+      "01/Jan/2024:24:00:01 +0000"))
+    check("MMM dd yyyy", Seq("Jan 01 2024", "Jun 31 2024", "jun 01 2024", "June 01 2024"))
+    check("dd MMM yy HH:mm Z", Seq("01 Nov 24 10:30 +0100", "01 Nov 24 10:30 +01"))
+  }
+
   test("round-trip sweep: every day of a leap year and every second shape") {
     val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss", Locale.US)
     val fast = FastDateTime.compile("yyyy-MM-dd HH:mm:ss").get
@@ -109,8 +128,10 @@ class FastDateTimeSpec extends AnyFunSuite {
   }
 
   test("unsupported patterns fall back (compile returns None)") {
-    for (p <- Seq("yyyy-MM-dd'T'HH:mm:ss", "yyyy-M-d", "MMM dd yyyy",
-        "yyyy-MM-dd HH:mm:ss.SSS", "HH:mm:ss z", "yyyy-MM", "mm:ss")) {
+    for (p <- Seq("yyyy-MM-dd'T'HH:mm:ss", "yyyy-M-d", "MMMM dd yyyy",
+        "yyyy-MM-dd HH:mm:ss.SSS", "HH:mm:ss z", "yyyy-MM", "mm:ss",
+        "dd/MMM/yyyy:HH:mm:ss X", "dd/MMM/yyyy:HH:mm:ss XX", "dd/MMM/yyyy:HH:mm:ss ZZZZ",
+        "HH:mm:ss O", "dd/MMM/yyyy:HH:mm:ss VV", "yyyy-MM-dd Z Z")) {
       assert(FastDateTime.compile(p).isEmpty, p)
     }
   }
@@ -159,6 +180,13 @@ class FastDateTimeSpec extends AnyFunSuite {
       case 'd' => Gen.frequency(
         5 -> uniform, 2 -> Gen.oneOf("29", "30", "31"),
         3 -> Gen.choose(1, 28).map(v => f"$v%02d"))
+      case 'M' if width == 3 => Gen.frequency(
+        8 -> Gen.oneOf(MonthNames), 2 -> Gen.oneOf("mar", "MAR", "Sept", "Foo", "Ma"))
+      case 'Z' => Gen.frequency(
+        5 -> (for (sg <- Gen.oneOf("+", "-"); h <- Gen.choose(0, 19); m <- Gen.choose(0, 61))
+          yield f"$sg$h%02d$m%02d"),
+        2 -> Gen.oneOf("+0000", "-0000", "+1800", "-1800", "+1801", "+0060", "+1900"),
+        1 -> Gen.oneOf("Z", "+00", "+00:00", "0000"))
       case _ => uniform
     }
   }
@@ -199,6 +227,37 @@ class FastDateTimeSpec extends AnyFunSuite {
       if (p(c)) { run += 1; best = math.max(best, run) } else run = 0
     }
     best
+  }
+
+  private val MonthNames = Seq("Jan", "Feb", "Mar", "Apr", "May", "Jun",
+    "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
+
+  test("forAll differential fuzz over MMM / Z patterns: agree on value-or-reject") {
+    val pats = Seq("dd/MMM/yyyy:HH:mm:ss Z", "MMM dd yyyy HH:mm:ss", "dd-MMM-yy Z", "HH:mm:ss Z")
+    val fasts = pats.map(p => p -> FastDateTime.compile(p).get).toMap
+    val fmts = pats.map(p => p -> DateTimeFormatter.ofPattern(p, Locale.US)).toMap
+    val genCase = for { p <- Gen.oneOf(pats); s <- inputGen(p) } yield (p, s)
+    val prop = Prop.forAllNoShrink(genCase) { case (p, s) =>
+      val fast = fasts(p)
+      val fmt = fmts(p)
+      def agreeOn[A](fa: => A, ra: => A): Boolean = {
+        val f = try Some(fa) catch { case _: Exception => None }
+        val r = try Some(ra) catch { case _: Exception => None }
+        // the documented signed/wide-year deviation, in the text before
+        // the trailing offset
+        val head = if (p.endsWith("Z")) s.dropRight(5) else s
+        f == r || (f.isEmpty && p.contains("yyyy") &&
+          (head.contains('+') || maxRun(head, _.isDigit) > 4))
+      }
+      agreeOn(fast.parseEpochDay(s), refEpochDay(fmt, s)) &&
+        agreeOn(fast.parseMicros(s), refMicros(fmt, s)) &&
+        agreeOn(fast.parseMillisOfDay(s), refMillisOfDay(fmt, s))
+    }
+    val params = org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(4000)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261019L))
+    val res = org.scalacheck.Test.check(params, prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("forAll differential fuzz: fast and formatter agree on value-or-reject") {
