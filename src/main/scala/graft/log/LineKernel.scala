@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
   * whose bytes are all below 0x80.
   *
   * The subset: an optional leading `^`; literals; `\d \D \s \S \w \W`;
-  * `.`; `[...]` / `[^...]` classes (read by [[LineParser.parseCharClass]],
+  * `.`; `[...]` / `[^...]` classes (read by [[LinePattern.parseCharClass]],
   * the package's one pattern parser); each atom with an optional greedy
   * `? * + {m} {m,} {m,n}`; and capture groups that are neither nested nor
   * quantified. Anything else — alternation, `$`, backreferences,
@@ -27,10 +27,10 @@ import scala.collection.mutable.ArrayBuffer
   * for `.+` (`\s+(.+)`, the MySQL preset's tail) the give-back `find()`
   * would perform is one right-to-left scan for the first character `.`
   * accepts. Every accepted pattern is thus outside
-  * [[LineParser.riskyPattern]]'s chains.
+  * [[LinePattern.riskyPattern]]'s chains.
   *
   * Java's `.` excludes the line terminators; on ASCII those are `\n` and
-  * `\r`, so the model is its own (not [[LineParser.riskyPattern]]'s `.`,
+  * `\r`, so the model is its own (not [[LinePattern.riskyPattern]]'s `.`,
   * which over-approximates it).
   *
   * Immutable and thread-safe: match results go to a caller-owned span
@@ -143,19 +143,19 @@ private[log] object LineKernel {
           i += 1
           (null, i)
         case ')' =>
-          if (!inGroup || LineParser.parseQuant(pattern, i + 1) != null) return None
+          if (!inGroup || LinePattern.parseQuant(pattern, i + 1) != null) return None
           inGroup = false
           marks.last += 2 * groups + 1
           groups += 1
           i += 1
           (null, i)
         case '[' =>
-          val (c, e) = LineParser.parseCharClass(pattern, i)
+          val (c, e) = LinePattern.parseCharClass(pattern, i)
           if (c == null) return None
           (ascii(c.test), e)
         case '\\' =>
           if (i + 1 >= n) return None
-          val c = LineParser.escCls(pattern.charAt(i + 1)) // null: \b \Q \1 \x.. \p{..}
+          val c = LinePattern.escCls(pattern.charAt(i + 1)) // null: \b \Q \1 \x.. \p{..}
           if (c == null) return None
           (ascii(c.test), i + 2)
         case '.' => (Dot, i + 1)
@@ -163,7 +163,7 @@ private[log] object LineKernel {
         case ch => (ascii(_ == ch), i + 1)
       }
       if (cls != null) {
-        val q = LineParser.parseQuant(pattern, next)
+        val q = LinePattern.parseQuant(pattern, next)
         val (mn, mx, end) =
           if (q == null) (1, 1, next)
           else if (!q.greedy || q.min > MaxCount || q.max > MaxCount) return None

@@ -681,7 +681,7 @@ final class LogPartitionReader(
   private val charset = java.nio.charset.Charset.forName(opts.encoding)
   private val isUtf8 = charset == java.nio.charset.StandardCharsets.UTF_8
   // single-line UTF-8 records reach the parser as their framed bytes
-  // (LineParser.parseUtf8: ASCII lines are never decoded); multi-line
+  // (LinePattern: ASCII lines are never decoded); multi-line
   // records and other charsets are assembled / decoded as Strings
   private val byteLines = isUtf8 && opts.recordStartPattern.isEmpty
   // custom framing bytes (the `lineSep` option), encoded under the same
@@ -690,24 +690,12 @@ final class LogPartitionReader(
   // a BOM on the file's FIRST line decodes to U+FEFF and would silently
   // corrupt the first row's first field; strip it once per file
   private var pendingBom = false
-  private val startPat: java.util.regex.Pattern =
-    opts.recordStartPattern.map(java.util.regex.Pattern.compile).orNull
-  private val startMatcher: java.util.regex.Matcher =
-    if (startPat == null) null else startPat.matcher("")
-  private val startBudget = new LineParser.BudgetedChars
-  // same engagement rule as the field pattern: explicit opt-in, or a
-  // structurally backtracking-capable start pattern
-  private val startMaxSteps: Long = opts.recordStartPattern.fold(0L)(p =>
-    LineParser.effectiveBudget(p, opts.regexMaxSteps, opts.regexBudgetExplicit))
-  // same fast-reject as LineParser: a continuation-heavy block (stack
-  // traces) pays the start-regex on every line; a required literal
-  // prefix rejects most of them without the regex machinery
-  private val startLit: Option[(String, Boolean)] =
-    opts.recordStartPattern.flatMap(LineParser.literalPrefix)
-  private def mightStart(line: String): Boolean = startLit match {
-    case Some((l, anchored)) => if (anchored) line.startsWith(l) else line.contains(l)
-    case None                => true
-  }
+  // does a line begin a multi-line record? Matched as the field pattern
+  // is (LinePattern): under the same regexMaxSteps budget, for it faces
+  // the same backtracking hazard once per line; null = single-line records
+  private val startMatcher: LinePattern.Matcher = opts.recordStartPattern.map(p =>
+    new LinePattern(p, opts.regexMaxSteps, opts.regexBudgetExplicit,
+      s"'$p' (recordStartPattern)").matcher()).orNull
   /** Line framing, abstracted over the two decode orders. Split-safe
     * (ASCII-transparent) charsets frame in BYTE space via Hadoop's
     * `LineRecordReader` — splittable, zero-copy, the hot path. Anything
@@ -805,7 +793,7 @@ final class LogPartitionReader(
     val c = part.chunks(chunkIdx)
     // multi-line: extend the split to EOF so a boundary-straddling record
     // can be finished; record ownership (chunkEnd) still follows c.length
-    val readLen = if (startPat != null) c.fileLen - c.start else c.length
+    val readLen = if (startMatcher != null) c.fileLen - c.start else c.length
     reader =
       if (opts.splitSafeEncoding)
         new HadoopFrames(new FileSplit(new Path(c.path), c.start, readLen, Array.empty[String]))
@@ -854,18 +842,11 @@ final class LogPartitionReader(
     s
   }
 
-  /** Does this line begin a multi-line record? The start regex runs under
-    * the same regexMaxSteps budget as the field pattern — it faces the
-    * same catastrophic-backtracking hazard, once per line. */
-  private def startsRecord(line: String): Boolean =
-    LineParser.findBudgeted(startMatcher, startBudget, line, startMaxSteps,
-      s"'${opts.recordStartPattern.get}' (recordStartPattern)")
-
   /** Next framed record of the current chunk (single line, or assembled
     * multi-line block), null when the chunk is exhausted.
     */
   private def nextRecord(): String = {
-    if (startPat == null) {
+    if (startMatcher == null) {
       if (reader.advance()) currentLine() else null
     } else nextMultilineRecord()
   }
@@ -881,7 +862,7 @@ final class LogPartitionReader(
     while (reader.advance()) {
       val pos = reader.pos
       val line = currentLine()
-      if (mightStart(line) && startsRecord(line)) {
+      if (startMatcher.find(line)) {
         if (pos > chunkEnd) { // next chunk's record: finish ours and stop
           chunkDone = true
           return flushBuf()

@@ -1,7 +1,5 @@
 package graft.log
 
-import java.util.regex.Pattern
-
 import org.apache.spark.sql.{Column, DataFrame, GraftSql}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -19,28 +17,44 @@ import org.apache.spark.unsafe.types.UTF8String
   * `regexp_extract(value, pat, i)` for i=1..N re-evaluates the regex N times
   * per line, while the reference matches once (`LogRecordReader.java:224`)
   * and reads N groups. Semantics preserved: unanchored `find()`
-  * (`LogRecordReader.java:225`).
+  * (`LogRecordReader.java:225`), matched as the scan matches
+  * ([[LinePattern]]).
   */
 case class ParseLogLine(child: Expression, pattern: String) extends UnaryExpression {
   // the SQL surface faces the same catastrophic-backtracking hazard as
-  // the scan: a structurally risky pattern runs under the regexMaxSteps
-  // budget (LineParser.riskyPattern gating — benign patterns keep the
-  // plain zero-overhead path). The budget comes from the session conf
-  // `spark.graft.log.regexMaxSteps` (captured at analysis time; 0
-  // disables) — the expression has no per-call options surface.
-  private val maxSteps: Long = ParseLogLine.sessionMaxSteps
-  // built with the expression, so a bad pattern fails at analysis
-  private val extractor = new ParseLogLine.Extractor(pattern, maxSteps)
+  // the scan: a structurally risky pattern (LinePattern.riskyPattern)
+  // runs under the budget of the session conf
+  // `spark.graft.log.regexMaxSteps`, captured at analysis time (0
+  // disables) — the expression has no per-call options surface. Built
+  // with the expression, so a bad pattern or budget fails at analysis.
+  private val linePattern = new LinePattern(pattern, ParseLogLine.sessionMaxSteps,
+    explicit = false, s"'$pattern' (parse_log_line; override via SET spark.graft.log.regexMaxSteps)")
+  // each task deserializes its own copy of the expression, so the
+  // matching state is per task (as Spark's RegExpExtract keeps its own)
+  @transient private lazy val matcher = linePattern.matcher()
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "parse_log_line"
 
-  override def nullSafeEval(input: Any): Any = extractor.extract(input.asInstanceOf[UTF8String])
+  override def nullSafeEval(input: Any): Any = extract(input.asInstanceOf[UTF8String])
+
+  /** The groups of `line`'s match, null when it does not match (a null
+    * element: an unparticipating optional group). */
+  def extract(line: UTF8String): ArrayData = {
+    val onHeap = line.getBaseObject.isInstanceOf[Array[Byte]]
+    val b = if (onHeap) line.getBaseObject.asInstanceOf[Array[Byte]] else line.getBytes
+    val off = if (onHeap) (line.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt else 0
+    if (!matcher.find(b, off, line.numBytes)) return null
+    val arr = new Array[Any](linePattern.groupCount)
+    var i = 0
+    while (i < arr.length) { arr(i) = matcher.groupUtf8(i + 1); i += 1 }
+    new GenericArrayData(arr)
+  }
 
   // the generated code calls the same method as eval
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("extractor", extractor, classOf[ParseLogLine.Extractor].getName)
+    val ref = ctx.addReferenceObj("parseLogLine", this, classOf[ParseLogLine].getName)
     nullSafeCodeGen(ctx, ev, c => {
       val r = ctx.freshName("groups")
       s"""
@@ -57,75 +71,14 @@ case class ParseLogLine(child: Expression, pattern: String) extends UnaryExpress
 object ParseLogLine {
   /** The expression's step budget: session conf
     * `spark.graft.log.regexMaxSteps` (0 disables), defaulting to the
-    * scan's default. Read at expression construction — analysis time,
-    * driver side — so `SET spark.graft.log.regexMaxSteps = 0` is the
-    * documented escape hatch for a legitimately-slow pattern.
+    * scan's default and validated as the option is. Read at expression
+    * construction — analysis time, driver side — so
+    * `SET spark.graft.log.regexMaxSteps = 0` is the documented escape
+    * hatch for a legitimately-slow pattern.
     */
-  def sessionMaxSteps: Long = {
-    val raw =
-      try org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.log.regexMaxSteps",
-          LogOptions.DefaultRegexMaxSteps.toString)
-      catch { case _: Exception => LogOptions.DefaultRegexMaxSteps.toString }
-    try math.max(0L, raw.trim.toLong)
-    catch { case _: NumberFormatException => LogOptions.DefaultRegexMaxSteps }
-  }
-
-  /** One match of `pattern` per line, every capture group out: the
-    * [[LineKernel]] over the bytes of an ASCII line when the pattern is in
-    * its subset and not budgeted, else `java.util.regex` on the decoded
-    * line (with the step budget when the pattern is risky). Thread-safe:
-    * per-call scratch only. */
-  final class Extractor(pattern: String, maxSteps: Long) extends Serializable {
-    private val compiled = Pattern.compile(pattern)
-    private val groupCount = compiled.matcher("").groupCount()
-    // fast-reject literal (LineParser.literalPrefix, same soundness
-    // contract): skip the regex machinery when the line can't contain the
-    // pattern's required leading literal
-    private val litPrefix: Option[(String, Boolean)] = LineParser.literalPrefix(pattern)
-    private val risky: Boolean = maxSteps > 0L && LineParser.riskyPattern(pattern)
-    private val kernel: LineKernel = if (risky) null else LineKernel.compile(pattern).orNull
-
-    /** The groups of `line`'s match, null when it does not match (a null
-      * element: an unparticipating optional group). */
-    def extract(line: UTF8String): ArrayData = {
-      if (kernel != null) {
-        val onHeap = line.getBaseObject.isInstanceOf[Array[Byte]]
-        val b = if (onHeap) line.getBaseObject.asInstanceOf[Array[Byte]] else line.getBytes
-        val off = if (onHeap) (line.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt else 0
-        val len = line.numBytes
-        if (LineParser.isAscii(b, off, len)) {
-          val spans = new Array[Int](2 * groupCount)
-          if (!kernel.find(b, off, len, spans)) return null
-          val arr = new Array[Any](groupCount)
-          var i = 0
-          while (i < groupCount) {
-            arr(i) = LineParser.utf8Copy(b, spans(2 * i), spans(2 * i + 1) - spans(2 * i))
-            i += 1
-          }
-          return new GenericArrayData(arr)
-        }
-      }
-      val s = line.toString
-      val mightMatch = litPrefix.forall { case (lit, anchored) =>
-        if (anchored) s.startsWith(lit) else s.contains(lit)
-      }
-      if (!mightMatch) return null
-      val m = compiled.matcher("")
-      val found = LineParser.findBudgeted(m, if (risky) new LineParser.BudgetedChars else null,
-        s, if (risky) maxSteps else 0L,
-        s"'$pattern' (parse_log_line; override via SET spark.graft.log.regexMaxSteps)")
-      if (!found) return null
-      val arr = new Array[Any](groupCount)
-      var i = 0
-      while (i < groupCount) {
-        val g = m.group(i + 1)
-        arr(i) = if (g == null) null else UTF8String.fromString(g)
-        i += 1
-      }
-      new GenericArrayData(arr)
-    }
-  }
+  def sessionMaxSteps: Long = LogOptions.parseMaxSteps(
+    org.apache.spark.sql.internal.SQLConf.get.getConfString(
+      "spark.graft.log.regexMaxSteps", LogOptions.DefaultRegexMaxSteps.toString))
 }
 
 /** Expression-only alternative to the DSV2 source (SURVEY.md §3.3): parse a

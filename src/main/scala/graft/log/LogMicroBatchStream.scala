@@ -563,8 +563,3 @@ object LogStreamIndexOffset {
 final case class LogStreamOffset(files: Seq[String]) extends Offset {
   override def json(): String = LogMicroBatchStream.toJson(files)
 }
-
-object LogStreamOffset {
-  def fromJson(json: String): LogStreamOffset =
-    LogStreamOffset(LogMicroBatchStream.fromJson(json))
-}

@@ -109,7 +109,7 @@ final case class LogOptions(
     // in milliseconds. 0 disables. The counting wrapper costs ~10% of the
     // regex-bound parse path (dev/SCAN_PROFILE.md), so by default it
     // engages ONLY for patterns structurally capable of catastrophic
-    // backtracking (LineParser.riskyPattern: nested quantification or
+    // backtracking (LinePattern.riskyPattern: nested quantification or
     // alternation under a quantifier) — benign patterns, including every
     // preset, keep the plain zero-overhead path. Setting the option
     // explicitly engages it for any pattern.
@@ -482,22 +482,13 @@ object LogOptions {
           "not a single 0x0A byte, so default line framing would split mid-character")
     }
 
-    def parseSteps(key: String): Option[Long] = get(key).map { s =>
-      val v = try s.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"[log] $key must be a non-negative integer (0 disables), got '$s'")
-      }
-      if (v < 0) throw new IllegalArgumentException(
-        s"[log] $key must be non-negative (0 disables), got $v")
-      v
-    }
     // regexMaxSteps set explicitly engages the counting wrapper for ANY
     // pattern; regexMaxStepsDefault (how session-conf defaults arrive —
     // LogPathRelation) only adjusts the budget, leaving engagement to the
     // riskyPattern auto-detector so benign ad-hoc queries keep the plain
     // zero-overhead path
-    val regexMaxStepsOpt = parseSteps("regexmaxsteps")
-    val regexMaxStepsDefault = parseSteps("regexmaxstepsdefault")
+    val regexMaxStepsOpt = get("regexmaxsteps").map(parseMaxSteps)
+    val regexMaxStepsDefault = get("regexmaxstepsdefault").map(parseMaxSteps)
 
     LogOptions(pattern, fieldNames, dataTypes, dateFormat, timeFormat, extensions,
       failFast, dropMalformed, maxFilesPerTrigger, maxBytesPerTrigger,
@@ -506,6 +497,19 @@ object LogOptions {
       encoding, lineSep,
       regexMaxStepsOpt.orElse(regexMaxStepsDefault).getOrElse(DefaultRegexMaxSteps),
       regexBudgetExplicit = regexMaxStepsOpt.isDefined)
+  }
+
+  /** A `regexMaxSteps` value (0 disables): the one validation of the
+    * budget, whether it arrives as the option, as its session-conf default
+    * on a ``log.`path` `` relation, or as `parse_log_line`'s session conf. */
+  private[log] def parseMaxSteps(s: String): Long = {
+    val v = try s.trim.toLong catch {
+      case _: NumberFormatException => throw new IllegalArgumentException(
+        s"[log] regexMaxSteps must be a non-negative integer (0 disables), got '$s'")
+    }
+    if (v < 0) throw new IllegalArgumentException(
+      s"[log] regexMaxSteps must be non-negative (0 disables), got $v")
+    v
   }
 
   /** Every option key [[fromMap]] reads (lowercase) — the whitelist for

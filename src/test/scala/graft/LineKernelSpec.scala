@@ -104,7 +104,7 @@ class LineKernelSpec extends AnyFunSuite {
         if (p.endsWith(".+)") || p.endsWith(".+")) giveBack += 1
         val jp = Pattern.compile(p)
         assert(k.groupCount == jp.matcher("").groupCount(), p)
-        assert(!LineParser.riskyPattern(p), s"kernel-accepted pattern is risky: $p")
+        assert(!LinePattern.riskyPattern(p), s"kernel-accepted pattern is risky: $p")
         lines(rnd, sample).foreach { l =>
           assert(kernelFind(k, l) == javaFind(jp, l),
             s"pattern '$p' line '${l.flatMap(c => if (c < ' ') f"\\x${c.toInt}%02x" else c.toString)}'")
@@ -130,7 +130,7 @@ class LineKernelSpec extends AnyFunSuite {
     shipped.foreach(p => assert(LineKernel.compile(p).isDefined, p))
     // and they take the kernel in the scan: no step budget engages
     shipped.foreach(p => assert(
-      LineParser.effectiveBudget(p, LogOptions.DefaultRegexMaxSteps, explicit = false) == 0L, p))
+      LinePattern.effectiveBudget(p, LogOptions.DefaultRegexMaxSteps, explicit = false) == 0L, p))
   }
 
   test("constructs outside the subset fall back to java.util.regex") {

@@ -127,11 +127,32 @@ class LineParserBytesSpec extends AnyFunSuite {
           .map(m => (1 to m.groupCount()).map(m.group))
         assert(interpreted == want, s"'$pattern' on '$line'")
       }
+      // malformed UTF-8 decodes as Hadoop's Text and java.lang.String both
+      // decode it, so find() runs on that String
+      for (bad <- malformed) {
+        val bytes = "070823 21:00:32 1 Query ".getBytes(UTF_8) ++ bad ++ " x".getBytes(UTF_8)
+        val text = new String(bytes, UTF_8)
+        assert(Text.decode(bytes) == text, bad.mkString(" "))
+        val in = InternalRow(UTF8String.fromBytes(bytes))
+        val interpreted = groups(expr.eval(in))
+        val row = generated(in)
+        assert(interpreted == (if (row.isNullAt(0)) None else groups(row.getArray(0))), s"'$pattern' on $text")
+        val m = regexOnly.matcher(text)
+        assert(interpreted == Some(m).filter(_.find()).map(m => (1 to m.groupCount()).map(m.group)),
+          s"'$pattern' on $text")
+      }
       // a literal line folds to the same value
       assert(groups(ParseLogLine(Literal("070823 21:00:32 1 Quit x"), pattern).eval(null)).isDefined ==
         regexOnly.matcher("070823 21:00:32 1 Quit x").find())
     }
   }
+
+  // a lone continuation byte, truncated 2/3/4-byte sequences, overlong
+  // forms, a surrogate, above U+10FFFF, a 5-byte form and FF FE
+  private val malformed: Seq[Array[Byte]] = Seq(
+    Array(0x80), Array(0xC3), Array(0xE2, 0x82), Array(0xF0, 0x9F, 0x98), Array(0xC0, 0xAF),
+    Array(0xE0, 0x80, 0xAF), Array(0xED, 0xA0, 0x80), Array(0xF4, 0x90, 0x80, 0x80),
+    Array(0xF8, 0x88, 0x80, 0x80, 0x80), Array(0xFF, 0xFE)).map(_.map(_.toByte))
 
   private def groups(a: Any): Option[Seq[String]] = Option(a.asInstanceOf[ArrayData])
     .map(_.toObjectArray(StringType).toSeq.map(v => if (v == null) null else v.toString))

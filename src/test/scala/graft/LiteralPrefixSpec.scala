@@ -6,7 +6,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.log.{LineParser, LogFrame, LogOptions}
+import graft.log.{LinePattern, LogFrame, LogOptions}
 
 /** Fast-reject literal prefix (round-11 scan optimization): the extracted
   * literal must be a NECESSARY condition for `Matcher.find` — soundness is
@@ -16,29 +16,29 @@ import graft.log.{LineParser, LogFrame, LogOptions}
 class LiteralPrefixSpec extends AnyFunSuite {
 
   test("extraction: anchored, unanchored, escapes, quantifier backoff") {
-    assert(LineParser.literalPrefix("^ERROR (\\d+)") == Some(("ERROR ", true)))
-    assert(LineParser.literalPrefix("ERROR (\\d+)") == Some(("ERROR ", false)))
+    assert(LinePattern.literalPrefix("^ERROR (\\d+)") == Some(("ERROR ", true)))
+    assert(LinePattern.literalPrefix("ERROR (\\d+)") == Some(("ERROR ", false)))
     // escaped metacharacter is part of the literal
-    assert(LineParser.literalPrefix("^\\[GC (\\d+)") == Some(("[GC ", true)))
+    assert(LinePattern.literalPrefix("^\\[GC (\\d+)") == Some(("[GC ", true)))
     // the char before a quantifier is NOT required (abc* needs only "ab")
-    assert(LineParser.literalPrefix("abc* (\\d+)") == Some(("ab", false)))
-    assert(LineParser.literalPrefix("abc+d") == Some(("ab", false)))
-    assert(LineParser.literalPrefix("abc?d") == Some(("ab", false)))
-    assert(LineParser.literalPrefix("abc{2}d") == Some(("ab", false)))
+    assert(LinePattern.literalPrefix("abc* (\\d+)") == Some(("ab", false)))
+    assert(LinePattern.literalPrefix("abc+d") == Some(("ab", false)))
+    assert(LinePattern.literalPrefix("abc?d") == Some(("ab", false)))
+    assert(LinePattern.literalPrefix("abc{2}d") == Some(("ab", false)))
     // escaped-meta char before a quantifier backs off too
-    assert(LineParser.literalPrefix("a\\.?b") == Some(("a", false)))
+    assert(LinePattern.literalPrefix("a\\.?b") == Some(("a", false)))
   }
 
   test("extraction bails where a literal is not provably required") {
-    assert(LineParser.literalPrefix("(\\d{6})\\s(\\w+)").isEmpty) // starts with group
-    assert(LineParser.literalPrefix("^(\\S+) (\\S+)").isEmpty)
-    assert(LineParser.literalPrefix("\\d+ INFO").isEmpty) // escape class first
-    assert(LineParser.literalPrefix("abc|def").isEmpty) // alternation voids "required"
-    assert(LineParser.literalPrefix("ERROR|WARN (\\d+)").isEmpty)
-    assert(LineParser.literalPrefix("(?i)error (\\d+)").isEmpty) // flags
-    assert(LineParser.literalPrefix("^").isEmpty)
-    assert(LineParser.literalPrefix(".*").isEmpty)
-    assert(LineParser.literalPrefix("\\Qa+b\\E rest").isEmpty) // \Q quoting unsupported
+    assert(LinePattern.literalPrefix("(\\d{6})\\s(\\w+)").isEmpty) // starts with group
+    assert(LinePattern.literalPrefix("^(\\S+) (\\S+)").isEmpty)
+    assert(LinePattern.literalPrefix("\\d+ INFO").isEmpty) // escape class first
+    assert(LinePattern.literalPrefix("abc|def").isEmpty) // alternation voids "required"
+    assert(LinePattern.literalPrefix("ERROR|WARN (\\d+)").isEmpty)
+    assert(LinePattern.literalPrefix("(?i)error (\\d+)").isEmpty) // flags
+    assert(LinePattern.literalPrefix("^").isEmpty)
+    assert(LinePattern.literalPrefix(".*").isEmpty)
+    assert(LinePattern.literalPrefix("\\Qa+b\\E rest").isEmpty) // \Q quoting unsupported
   }
 
   test("soundness: literal absent (or not at start when anchored) => find() cannot match") {
@@ -49,7 +49,7 @@ class LiteralPrefixSpec extends AnyFunSuite {
       .map(_.take(40).mkString)
     def sample(seed: Long): String = word.apply(Gen.Parameters.default, Seed(seed)).get
     for (p <- pats) {
-      val (lit, anchored) = LineParser.literalPrefix(p).get
+      val (lit, anchored) = LinePattern.literalPrefix(p).get
       val re = Pattern.compile(p)
       val lines = (1L to 500L).map(s => sample(s * 7 + p.hashCode)) ++
         // adversarial: the literal embedded mid-line, prefixes of it, case twists

@@ -3,7 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-/** The `regexMaxSteps` kill switch ([[graft.log.LineParser.findBudgeted]]):
+/** The `regexMaxSteps` kill switch ([[graft.log.LinePattern.findBudgeted]]):
   * a catastrophically-backtracking user pattern on adversarial input must
   * fail in milliseconds with the pattern, line and file named — not stall
   * a scan task for hours (the reference shares the hazard,
@@ -115,7 +115,7 @@ class RegexBudgetSpec extends SparkSpec {
   }
 
   test("riskyPattern: flags the catastrophic class, clears every benign preset") {
-    import graft.log.{LineParser, LogOptions}
+    import graft.log.{LinePattern, LogOptions}
     // structurally backtracking-capable: quantified group with a
     // quantifier or alternation in its body
     for (p <- Seq("(a+)+x", "((?:a+)+x)", "(.*a){12}x", "(a|aa)+x", "(a?)+x",
@@ -123,7 +123,7 @@ class RegexBudgetSpec extends SparkSpec {
                   // inlined dot-quantifier chains: no quantified group,
                   // still O(n^k) — probed 6.8 s at k=12/n=30 on this JVM
                   ".*a.*a.*ax", "(.+)=(.+):(.+);(.*)"))
-      assert(LineParser.riskyPattern(p), s"should flag: $p")
+      assert(LinePattern.riskyPattern(p), s"should flag: $p")
     // overlapping NON-dot chains: the round-12 blind class. Probed on this
     // JVM: \S*a x8 → 5.0 s at n=40, [^"]*x x3 → 8.9 s at n=400,
     // \w*a x8 → 4.7 s at n=40 — same overlap structure as the dot chain
@@ -133,7 +133,7 @@ class RegexBudgetSpec extends SparkSpec {
                   "(\\S+):(\\S+):(\\S+)x", // ':' is non-space → ambiguous splits
                   "a*aa*aa*ax", // quantified literals overlapping their successor
                   "[ab]*a[ab]*a[ab]*ax")) // narrow class, still overlapping
-      assert(LineParser.riskyPattern(p), s"should flag (overlap chain): $p")
+      assert(LinePattern.riskyPattern(p), s"should flag (overlap chain): $p")
     // review-found blind classes (round 13, each probed before fixing):
     for (p <- Seq(
         "\\S{1,}a" * 8 + "x", // {m,} == + (0.97 s at n=40)
@@ -142,7 +142,7 @@ class RegexBudgetSpec extends SparkSpec {
         "(\\S)*a" * 12 + "x", // same, escape-class body
         "([^b])*a([^b])*a([^b])*ax", // same, negated-class body
         "\\d*x?1" * 8 + "y")) // skippable successor: \d overlaps the 1 past x?
-      assert(LineParser.riskyPattern(p), s"should flag (round-13 class): $p")
+      assert(LinePattern.riskyPattern(p), s"should flag (round-13 class): $p")
     // review-found blind classes (round 14, each probed before fixing):
     for (p <- Seq(
         // escape as a range LOWER bound: [\t-z] spans \t..z (includes 'a'),
@@ -153,12 +153,12 @@ class RegexBudgetSpec extends SparkSpec {
         // overlap via a NON-FIRST alternative: the x branch doesn't overlap
         // \d but the 0 branch does. Probed: 26 s at n=400 on all-digit input
         "\\d*(x|0)" * 3 + "y"))
-      assert(LineParser.riskyPattern(p), s"should flag (round-14 class): $p")
+      assert(LinePattern.riskyPattern(p), s"should flag (round-14 class): $p")
     // ...and the precise paths around them stay precise: a modeled
     // escape-bound range that does NOT reach its successor, and an
     // alternation-free successor group, contribute nothing
-    assert(!LineParser.riskyPattern("[\\t-.]*z" * 8 + "x")) // \t..'.' excludes 'z'
-    assert(!LineParser.riskyPattern("\\d*(xy)" * 8 + "z")) // plain group, no overlap
+    assert(!LinePattern.riskyPattern("[\\t-.]*z" * 8 + "x")) // \t..'.' excludes 'z'
+    assert(!LinePattern.riskyPattern("\\d*(xy)" * 8 + "z")) // plain group, no overlap
     // single-level quantifiers cannot multiply match attempts
     for (p <- Seq("(\\d+) (\\w+)", "(.*)", "^ERROR: (\\d+) (.+)",
                   "([+*]+)x", // quantifier chars inside a class are literals
@@ -167,7 +167,7 @@ class RegexBudgetSpec extends SparkSpec {
                   "(.*) -> (.*)", // two dot-quantifiers: at worst quadratic
                   "\\.*a\\.*b\\.*c") ++ // escaped dots are literals
                 LogOptions.Presets.values.map(_("pattern")))
-      assert(!LineParser.riskyPattern(p), s"should NOT flag: $p")
+      assert(!LinePattern.riskyPattern(p), s"should NOT flag: $p")
     // NON-overlapping quantified atoms never count toward the chain: the
     // atom's class cannot match its successor, so split points are
     // unambiguous and backtracking is linear — these shapes are ubiquitous
@@ -184,11 +184,11 @@ class RegexBudgetSpec extends SparkSpec {
                   "\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}", // fixed {m}: no choice
                   "(\\d{2}:)x(\\w{3},)yz", // fixed reps inside plain groups
                   "\\d*x1\\d*x1\\d*x1y")) // non-skippable x blocks the overlap
-      assert(!LineParser.riskyPattern(p), s"should NOT flag (no overlap): $p")
+      assert(!LinePattern.riskyPattern(p), s"should NOT flag (no overlap): $p")
     // trailing atom has no successor; 2 overlapping atoms are at worst
     // quadratic — both under the >= 3 chain threshold
-    assert(!LineParser.riskyPattern("(\\S*)"))
-    assert(!LineParser.riskyPattern("\\S*a\\S*ax"))
+    assert(!LinePattern.riskyPattern("(\\S*)"))
+    assert(!LinePattern.riskyPattern("\\S*a\\S*ax"))
     // every pattern the bench/oracle queries scan with stays unflagged
     // (flagging one would silently add the ~10% wrapper to a bench path)
     for (p <- Seq(
@@ -196,18 +196,18 @@ class RegexBudgetSpec extends SparkSpec {
         "(\\S+) (\\d{2}:\\d{2}:\\d{2}) (\\w+) evt=(\\d+)",
         "(\\d+) (\\w+) user=(\\d+) ([0-9.]+)",
         "(\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}) (\\w+) evt=(\\d+)"))
-      assert(!LineParser.riskyPattern(p), s"bench pattern must stay unflagged: $p")
+      assert(!LinePattern.riskyPattern(p), s"bench pattern must stay unflagged: $p")
     // backreferences: their own catastrophic class ((\w+)\1+), flagged
     // outright
-    assert(LineParser.riskyPattern("(\\w+)\\1+x"))
-    assert(LineParser.riskyPattern("(a+)\\1"))
-    assert(!LineParser.riskyPattern("(\\d+)\\.(\\d+)")) // escaped dot, no backref
+    assert(LinePattern.riskyPattern("(\\w+)\\1+x"))
+    assert(LinePattern.riskyPattern("(a+)\\1"))
+    assert(!LinePattern.riskyPattern("(\\d+)\\.(\\d+)")) // escaped dot, no backref
     // engagement: default budget is live only for flagged patterns;
     // explicit setting engages anything
-    assert(LineParser.effectiveBudget("(a+)+x", 10L, explicit = false) == 10L)
-    assert(LineParser.effectiveBudget("(\\d+)", 10L, explicit = false) == 0L)
-    assert(LineParser.effectiveBudget("(\\d+)", 10L, explicit = true) == 10L)
-    assert(LineParser.effectiveBudget("(a+)+x", 0L, explicit = true) == 0L)
+    assert(LinePattern.effectiveBudget("(a+)+x", 10L, explicit = false) == 10L)
+    assert(LinePattern.effectiveBudget("(\\d+)", 10L, explicit = false) == 0L)
+    assert(LinePattern.effectiveBudget("(\\d+)", 10L, explicit = true) == 10L)
+    assert(LinePattern.effectiveBudget("(a+)+x", 0L, explicit = true) == 0L)
   }
 
   test("huge explicit regexMaxSteps saturates instead of wrapping negative") {
@@ -241,6 +241,33 @@ class RegexBudgetSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("value"), "((.*a){12}x)").as("g")).collect()
       assert(out.head.isNullAt(0)) // no match, NO budget error
     } finally spark.conf.unset("spark.graft.log.regexMaxSteps")
+  }
+
+  test("a bad spark.graft.log.regexMaxSteps fails parse_log_line and log.`path` alike") {
+    import spark.implicits._
+    val dir = writeLog(Seq("1 INFO"))
+    val df = Seq("1 INFO").toDF("value")
+    for (bad <- Seq("-1", "abc")) {
+      spark.conf.set("spark.graft.log.regexMaxSteps", bad)
+      try {
+        // at analysis, before any row is read: the DataFrame and SQL surfaces
+        val e1 = intercept[IllegalArgumentException] {
+          df.select(graft.log.LogFrame.parseLogLine(org.apache.spark.sql.functions.col("value"),
+            "(\\d+) (\\w+)"))
+        }
+        val e2 = intercept[Exception] {
+          spark.sql("SELECT parse_log_line('1 INFO', '(\\\\d+)')").queryExecution.analyzed
+        }
+        val e3 = intercept[Exception] {
+          spark.sql(s"SELECT * FROM log.`${dir.getAbsolutePath}`").queryExecution.analyzed
+        }
+        for (e <- Seq(e1, e2, e3)) {
+          val msgs = chain(e).flatMap(t => Option(t.getMessage))
+          assert(msgs.exists(_.contains("regexMaxSteps")), s"$bad: ${msgs.mkString(" | ")}")
+          assert(!msgs.exists(_.contains("regexmaxstepsdefault")), s"$bad: ${msgs.mkString(" | ")}")
+        }
+      } finally spark.conf.unset("spark.graft.log.regexMaxSteps")
+    }
   }
 
   test("option validation: negative or non-numeric regexMaxSteps fails at load") {

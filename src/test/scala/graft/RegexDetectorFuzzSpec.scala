@@ -2,11 +2,11 @@ package graft
 
 import org.scalacheck.{Gen, Prop}
 
-import graft.log.LineParser
+import graft.log.LinePattern
 
 /** Fuzz for the backtracking detector and the budgeted matcher.
   *
-  * 1. Totality: [[LineParser.riskyPattern]] is a hand-rolled scanner that
+  * 1. Totality: [[LinePattern.riskyPattern]] is a hand-rolled scanner that
   *    runs on EVERY pattern at load time — it must terminate and never
   *    throw on any compile-valid pattern a grammar can produce (groups,
   *    classes, ranges, escapes, quantifiers, alternation, anchors).
@@ -50,7 +50,7 @@ class RegexDetectorFuzzSpec extends SparkSpec {
       val compiles = try { java.util.regex.Pattern.compile(p); true }
         catch { case _: Exception => false }
       !compiles || {
-        LineParser.riskyPattern(p) // must not throw
+        LinePattern.riskyPattern(p) // must not throw
         true
       }
     }
@@ -66,7 +66,7 @@ class RegexDetectorFuzzSpec extends SparkSpec {
       n <- Gen.choose(0, 24)
       cs <- Gen.listOfN(n, Gen.oneOf('a', 'b', 'c', '1', '2', ' ', '.', '['))
     } yield cs.mkString
-    val buf = new LineParser.BudgetedChars
+    val buf = new LinePattern.BudgetedChars
     // budget 2M: a benign unanchored find on a 24-char line costs ~10k
     // reads (150x margin); only genuine exponential/high-poly blowups can
     // trip it — and the GUARDED matcher runs FIRST so such a pattern
@@ -78,13 +78,13 @@ class RegexDetectorFuzzSpec extends SparkSpec {
       compiled.forall { pat =>
         val guarded = pat.matcher("")
         val guardedFound: Option[Boolean] =
-          try Some(LineParser.findBudgeted(guarded, buf, line, Budget, s"'$p'"))
+          try Some(LinePattern.findBudgeted(guarded, buf, line, Budget, s"'$p'"))
           catch { case _: org.apache.spark.SparkException => None }
         guardedFound match {
           case None =>
             // tripped the budget on a 24-char line: that is a genuine
             // blowup, and the static detector must have flagged it
-            LineParser.riskyPattern(p)
+            LinePattern.riskyPattern(p)
           case Some(gf) =>
             val plain = pat.matcher(line)
             val pf = plain.find()
