@@ -121,14 +121,15 @@ final class LineParser(
     */
   def parse(line: String): InternalRow =
     // count(*) shortcut never evaluates the regex — matched/unmatched are
-    // honestly unmeasured (zero) on a fully-pruned scan
-    if (!needsMatch) new GenericInternalRow(numFields) else route(matcher.find(line))
+    // honestly unmeasured (zero) on a fully-pruned scan; no column is
+    // required then, so every line shares the one empty row
+    if (!needsMatch) InternalRow.empty else route(matcher.find(line))
 
   /** [[parse]] for a UTF-8 line framed in `b[off, off + len)`, decoded
     * only if it is not ASCII. `b` may be reused by the caller once this
     * returns. */
   def parseUtf8(b: Array[Byte], off: Int, len: Int): InternalRow =
-    if (!needsMatch) new GenericInternalRow(numFields) else route(matcher.find(b, off, len))
+    if (!needsMatch) InternalRow.empty else route(matcher.find(b, off, len))
 
   /** The current line's row, given whether the pattern matched it. */
   private def route(matched: Boolean): InternalRow = {

@@ -5,13 +5,17 @@ import java.util
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import com.esotericsoftware.kryo.{Kryo, KryoSerializable}
+import com.esotericsoftware.kryo.io.{Input, Output}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
+import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.SparkException
+import org.apache.spark.{SparkContext, SparkException}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -297,10 +301,11 @@ final class LogScan(
   private def matchesExtension(name: String): Boolean =
     LogScan.matchesExtension(name, opts.extensions)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)
-    new LogPartitionReaderFactory(opts, required, pushed, () => conf.value)
-  }
+  // the conf is snapshotted here, at execution, and shipped once per scan;
+  // Spark's ContextCleaner releases the broadcast with the plan
+  override def createReaderFactory(): PartitionReaderFactory =
+    new LogPartitionReaderFactory(opts, required, pushed,
+      SerializableHadoopConf.broadcast(SparkSession.active.sparkContext))
 
   /** Scan observability (Spark UI / metrics API): per-task matched vs
     * unmatched vs dropped line counts answer "is my pattern actually
@@ -616,17 +621,18 @@ final case class LogInputPartition(chunks: Array[LogChunk]) extends InputPartiti
     LogScan.topHostsByBytes(chunks.iterator.flatMap(c => c.hosts.map(_ -> c.length)))
 }
 
-/** `conf` yields the Hadoop conf on the executor: shipped with each task
-  * by a batch scan, read from one broadcast by a stream. */
+/** `conf` is the readers' Hadoop conf, one broadcast per batch scan or
+  * per stream: a task deserializes only its handle and reads the one copy
+  * its executor caches. */
 final class LogPartitionReaderFactory(
     opts: LogOptions,
     required: StructType,
     pushed: Array[org.apache.spark.sql.sources.Filter],
-    conf: () => Configuration)
+    conf: Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new LogPartitionReader(
-      partition.asInstanceOf[LogInputPartition], opts, required, pushed.toSeq, conf())
+      partition.asInstanceOf[LogInputPartition], opts, required, pushed.toSeq, conf.value.value)
 }
 
 /** One partition (one or more file chunks) → rows. Uses Hadoop's
@@ -715,8 +721,8 @@ final class LogPartitionReader(
   private final class HadoopFrames(split: FileSplit) extends Frames {
     private val rr =
       if (delimBytes != null) new LineRecordReader(delimBytes) else new LineRecordReader()
-    // a JobConf `conf` (SerializableHadoopConf's) is used as is; any other
-    // Configuration is copied whole here, once per chunk
+    // the broadcast JobConf is wrapped uncopied (JobContextImpl copies any
+    // other Configuration whole, once per chunk) and only read
     rr.initialize(split, new TaskAttemptContextImpl(conf, new TaskAttemptID()))
     def advance(): Boolean = rr.nextKeyValue()
     def pos: Long = rr.getCurrentKey.get()
@@ -964,18 +970,34 @@ final class LogPartitionReader(
 }
 
 /** Hadoop `Configuration` is not `Serializable`; ship it via its own
-  * `write`/`readFields` wire format (same trick Spark uses internally).
+  * `write`/`readFields` wire format (same trick Spark uses internally),
+  * under Java serialization and under Kryo alike, for a broadcast is
+  * written with `spark.serializer`.
   */
-final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
+final class SerializableHadoopConf(@transient var value: Configuration)
+    extends Serializable with KryoSerializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
     value.write(out)
   }
-  // a JobConf, so the reader's per-chunk TaskAttemptContextImpl uses it as
-  // is (JobContextImpl copies any other Configuration, all ~1k entries)
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
-    value = new org.apache.hadoop.mapred.JobConf(false)
+    readConf(in)
+  }
+  override def write(kryo: Kryo, out: Output): Unit = value.write(new java.io.DataOutputStream(out))
+  override def read(kryo: Kryo, in: Input): Unit = readConf(new java.io.DataInputStream(in))
+  // a JobConf, so the reader's per-chunk TaskAttemptContextImpl uses it as
+  // is (JobContextImpl copies any other Configuration, all ~1k entries)
+  private def readConf(in: java.io.DataInput): Unit = {
+    value = new JobConf(false)
     value.readFields(in)
   }
+}
+
+object SerializableHadoopConf {
+  /** The readers' conf for one scan or stream: a snapshot of the
+    * context's Hadoop conf, taken now, in one broadcast. The executor
+    * side only reads it (`LineRecordReader.initialize`). */
+  def broadcast(sc: SparkContext): Broadcast[SerializableHadoopConf] =
+    sc.broadcast(new SerializableHadoopConf(new JobConf(sc.hadoopConfiguration)))
 }

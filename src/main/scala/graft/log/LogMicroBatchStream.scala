@@ -62,10 +62,9 @@ final class LogMicroBatchStream(
   import LogMicroBatchStream._
 
   private val spark = SparkSession.active
-  // the readers' Hadoop conf, shipped once per stream instead of with every
-  // task of every micro-batch; a JobConf, which the readers use uncopied
-  private val confBroadcast = spark.sparkContext.broadcast(new SerializableHadoopConf(
-    new org.apache.hadoop.mapred.JobConf(spark.sparkContext.hadoopConfiguration)))
+  // the readers' Hadoop conf, shipped once per stream instead of once per
+  // micro-batch; destroyed in stop()
+  private val confBroadcast = SerializableHadoopConf.broadcast(spark.sparkContext)
   private val logDir = new Path(checkpointLocation, "graft-file-log")
 
   // In-memory view rebuilt from the persistent log at (re)start: seen file
@@ -350,10 +349,8 @@ final class LogMicroBatchStream(
       org.apache.spark.sql.GraftSql.sqlConf(spark).filesOpenCostInBytes)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val bc = confBroadcast
-    new LogPartitionReaderFactory(opts, required, pushed, () => bc.value.value)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new LogPartitionReaderFactory(opts, required, pushed, confBroadcast)
 
   override def stop(): Unit = confBroadcast.destroy()
 
