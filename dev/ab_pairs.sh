@@ -9,9 +9,10 @@
 # first seed). A is the parent, B the change. Per run it prints the four
 # bounded end-to-end metrics and the per-op CPU medians from
 # `perfbench/.cache/results/<workload>_s<seed>_t0.json`; at the end, each
-# metric's median per side, the pairs B won and A's quartiles. A gain is
-# worth claiming when B wins (nearly) every pair and the medians differ by
-# more than A's interquartile range.
+# metric's median per side, the pairs B won and A's quartiles, and the same
+# three figures for each op kind's per-run CPU median. A gain is worth
+# claiming when B wins (nearly) every pair and the medians differ by more
+# than A's interquartile range.
 #
 # Build the B side from `git worktree add` or a fresh `git clone`, never
 # from a `cp -a` of a built checkout: sbt's incremental state in the copy
@@ -83,10 +84,19 @@ for m in bounded:
           f"B better in {won} of {len(seeds)}  A quartiles [{q1:.4f}, {q3:.4f}]")
 kinds = sorted({o[0] for r in runs["A"] for o in r["ops"] if o[3]})
 if kinds:
-    print("  per-op CPU medians (s), A -> B:")
+    print("  per-op CPU medians (s), A -> B, over each run's median of the op:")
 for k in kinds:
-    med = lambda side: statistics.median(
-        [statistics.median(cs) for r in runs[side] if (cs := [o[3] for o in r["ops"] if o[0] == k])])
-    ma, mb = med("A"), med("B")
-    print(f"    {k:<14} {ma:.4f} -> {mb:.4f} ({(mb - ma) / ma if ma else 0:+.1%})")
+    # one value per run: that run's median CPU of op k (None if it has none)
+    per_run = lambda side: [statistics.median(cs) if (cs := [o[3] for o in r["ops"] if o[0] == k]) else None
+                            for r in runs[side]]
+    va, vb = per_run("A"), per_run("B")
+    pairs = [(x, y) for x, y in zip(va, vb) if x is not None and y is not None]
+    if not pairs:
+        continue
+    xa, xb = [x for x, _ in pairs], [y for _, y in pairs]
+    ma, mb = statistics.median(xa), statistics.median(xb)
+    won = sum(y < x for x, y in pairs)
+    q1, _, q3 = quartiles(xa)
+    print(f"    {k:<14} {ma:.4f} -> {mb:.4f} ({(mb - ma) / ma if ma else 0:+.1%})  "
+          f"B lower in {won} of {len(pairs)}  A quartiles [{q1:.4f}, {q3:.4f}]")
 EOF

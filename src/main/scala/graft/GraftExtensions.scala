@@ -15,12 +15,19 @@ import graft.functions.{CanonicalizeUrl, CosineSimilarity, HashedShingles, MinHa
   * // or: spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * No custom optimizer rules or strategies are injected — per SURVEY.md
-  * §4.2, Catalyst's built-ins cover every rewrite this engine needs. The
-  * extension surface is scalar functions plus ONE resolution rule,
-  * [[graft.log.ResolveLogPathTable]]: `SELECT * FROM log.`/path`` —
-  * Spark grants that syntax only to v1 FileFormat sources, and ad-hoc
-  * SQL over a file is the reference deployment's primary usage mode.
+  * The extension surface is scalar functions, ONE resolution rule and ONE
+  * optimizer rule:
+  *   - [[graft.log.ResolveLogPathTable]]: `SELECT * FROM log.`/path`` —
+  *     Spark grants that syntax only to v1 FileFormat sources, and ad-hoc
+  *     SQL over a file is the reference deployment's primary usage mode;
+  *   - [[graft.log.AbsorbParseLogLine]]: `parse_log_line(line, p)` over a
+  *     default `(.*)` read becomes a read of `p`, so each line is matched
+  *     once, in the reader, instead of by `(.*)` and then again by every
+  *     operator that evaluates the call (its filter and its projection).
+  *     It runs with the operator optimizations, before the scan's
+  *     filter and column push-down, which then claim its
+  *     `unmatched_lines IS NULL` and prune its unread fields.
+  * No strategies are injected.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -35,6 +42,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // before extension rules run); the hint rule covers non-parser plans.
     e.injectParser((spark, delegate) => new graft.log.LogPathParser(spark, delegate))
     e.injectHintResolutionRule(spark => new graft.log.ResolveLogPathTable(spark))
+    e.injectOptimizerRule(_ => graft.log.AbsorbParseLogLine)
     e.injectFunction((
       FunctionIdentifier("parse_log_line"),
       info("parse_log_line", "parse_log_line(line, pattern) - one-pass regex extract of all capture groups"),

@@ -33,13 +33,15 @@ import java.time.LocalDate
   *     resolves an instant — magnitude <= 18:00) and then ignored: every
   *     conversion keeps the wall clock, as the formatter path does
   *     (TIMESTAMP is the wall clock under pinned UTC)
-  * Invalid input throws (any exception — the reader's error routing
-  * catches all), matching the formatter's throw-on-invalid contract.
+  * Invalid input returns [[FastDateTime.Invalid]] (or
+  * [[FastDateTime.InvalidMicros]]) where the formatter throws, so a
+  * malformed value costs no exception; [[FastDateTime.error]] is the
+  * exception FAILFAST reports for it.
   *
   * DOCUMENTED DEVIATION (pinned in FastDateTimeSpec): the formatter's
   * `yyyy` is `appendValue(YEAR_OF_ERA, 4, 19, SignStyle.EXCEEDS_PAD)`,
   * which also accepts explicitly-signed wide years (`+12345-01-01`).
-  * The fast path is fixed-width: such inputs throw and the line
+  * The fast path is fixed-width: such inputs are invalid and the line
   * error-routes. Log timestamps with five-digit signed years do not
   * occur in practice; a user who needs them configures a pattern
   * outside the compiled subset (e.g. with a zone or text token), which
@@ -61,25 +63,25 @@ private[log] final class FastDateTime private (
   private var sec = 0
   private var carry = 0 // 1 when hour 24 rolled into the next day
 
-  private def fail(s: String): Nothing =
-    throw new IllegalArgumentException(s"cannot parse '$s'")
-
+  /** The `len` digits at `at` as a number; -1 when they are not all
+    * there or not all `0`-`9`. */
   private def digits(s: String, at: Int, len: Int): Int = {
-    if (at + len > s.length) fail(s)
+    if (at + len > s.length) return -1
     var v = 0
     var i = at
     val end = at + len
     while (i < end) {
       val c = s.charAt(i)
-      if (c < '0' || c > '9') fail(s)
+      if (c < '0' || c > '9') return -1
       v = v * 10 + (c - '0')
       i += 1
     }
     v
   }
 
-  /** Run the program over the whole string (must consume it exactly). */
-  private def run(s: String): Unit = {
+  /** Run the program over the whole string (must consume it exactly);
+    * false where the formatter would throw. */
+  private def run(s: String): Boolean = {
     y = 0; mo = 1; d = 1; h = 0; mi = 0; sec = 0
     var pos = 0
     var i = 0
@@ -88,50 +90,55 @@ private[log] final class FastDateTime private (
       val kind = op >>> 16
       kind match {
         case Lit =>
-          if (pos >= s.length || s.charAt(pos) != (op & 0xffff).toChar) fail(s)
+          if (pos >= s.length || s.charAt(pos) != (op & 0xffff).toChar) return false
           pos += 1
         case Year4 =>
           y = digits(s, pos, 4); pos += 4
-          if (y == 0) fail(s) // 'y' is year-of-era: 0000 is out of range
-        case Year2 => y = 2000 + digits(s, pos, 2); pos += 2
+          if (y <= 0) return false // 'y' is year-of-era: 0000 is out of range
+        case Year2 =>
+          val yy = digits(s, pos, 2); pos += 2
+          if (yy < 0) return false
+          y = 2000 + yy
         case Month =>
           mo = digits(s, pos, 2); pos += 2
-          if (mo < 1 || mo > 12) fail(s)
+          if (mo < 1 || mo > 12) return false
         case Day =>
           d = digits(s, pos, 2); pos += 2
-          if (d < 1 || d > 31) fail(s)
+          if (d < 1 || d > 31) return false
         case Hour =>
           h = digits(s, pos, 2); pos += 2
-          if (h > 24) fail(s) // 24 allowed iff :00:00 — checked post-run
+          if (h < 0 || h > 24) return false // 24 allowed iff :00:00 — checked post-run
         case Minute =>
           mi = digits(s, pos, 2); pos += 2
-          if (mi > 59) fail(s)
+          if (mi < 0 || mi > 59) return false
         case Second =>
           sec = digits(s, pos, 2); pos += 2
-          if (sec > 59) fail(s)
+          if (sec < 0 || sec > 59) return false
         case MonthName =>
           mo = 1
           while (mo <= 12 && !s.startsWith(MonthNames(mo - 1), pos)) mo += 1
-          if (mo > 12) fail(s)
+          if (mo > 12) return false
           pos += 3
         case Offset =>
-          if (pos >= s.length || (s.charAt(pos) != '+' && s.charAt(pos) != '-')) fail(s)
+          if (pos >= s.length || (s.charAt(pos) != '+' && s.charAt(pos) != '-')) return false
           val oh = digits(s, pos + 1, 2)
           val om = digits(s, pos + 3, 2)
-          if (om > 59 || oh > 23 || (hasDate && hasTime && oh * 60 + om > 18 * 60)) fail(s)
+          if (oh < 0 || om < 0 || om > 59 || oh > 23 ||
+              (hasDate && hasTime && oh * 60 + om > 18 * 60)) return false
           pos += 5
       }
       i += 1
     }
-    if (pos != s.length) fail(s) // formatter rejects unparsed trailing text
+    if (pos != s.length) return false // formatter rejects unparsed trailing text
     // SMART end-of-day: hour 24 with zero minutes/seconds resolves to
     // midnight of the NEXT day (carried into the date); any other 24:xx
     // is invalid
     if (h == 24) {
-      if (mi != 0 || sec != 0) fail(s)
+      if (mi != 0 || sec != 0) return false
       h = 0
       carry = 1
     } else carry = 0
+    true
   }
 
   /** SMART day-of-month resolution: clamp to the month's last valid day. */
@@ -140,29 +147,34 @@ private[log] final class FastDateTime private (
     LocalDate.of(y, mo, if (d > last) last else d).toEpochDay + carry
   }
 
-  /** DATE → days since epoch (requires date fields in the pattern). */
-  def parseEpochDay(s: String): Int = {
-    if (!hasDate) fail(s)
-    run(s)
-    epochDay.toInt
-  }
+  /** DATE → days since epoch (requires date fields in the pattern), or
+    * [[FastDateTime.Invalid]]. */
+  def parseEpochDay(s: String): Int =
+    if (hasDate && run(s)) epochDay.toInt else Invalid
 
-  /** TIMESTAMP → epoch micros, UTC; absent time fields are midnight. */
-  def parseMicros(s: String): Long = {
-    if (!hasDate) fail(s)
-    run(s)
-    (epochDay * 86400L + h * 3600L + mi * 60L + sec) * 1000000L
-  }
+  /** TIMESTAMP → epoch micros, UTC; absent time fields are midnight. Or
+    * [[FastDateTime.InvalidMicros]]. */
+  def parseMicros(s: String): Long =
+    if (hasDate && run(s)) (epochDay * 86400L + h * 3600L + mi * 60L + sec) * 1000000L
+    else InvalidMicros
 
-  /** TIME → millis of day (requires at least the hour field). */
-  def parseMillisOfDay(s: String): Int = {
-    if (!hasTime) fail(s)
-    run(s)
-    (h * 3600 + mi * 60 + sec) * 1000
-  }
+  /** TIME → millis of day (requires at least the hour field), or
+    * [[FastDateTime.Invalid]]. */
+  def parseMillisOfDay(s: String): Int =
+    if (hasTime && run(s)) (h * 3600 + mi * 60 + sec) * 1000 else Invalid
 }
 
 private[log] object FastDateTime {
+  /** A DATE or TIME that does not parse: no epoch day of a four-digit
+    * year, nor any millisecond of a day, is `Int.MinValue`. */
+  final val Invalid = Int.MinValue
+  /** A TIMESTAMP that does not parse (years 1-9999 stay far from it). */
+  final val InvalidMicros = Long.MinValue
+
+  /** The exception a value that does not parse reports under FAILFAST. */
+  def error(s: String): IllegalArgumentException =
+    new IllegalArgumentException(s"cannot parse '$s'")
+
   private final val Lit = 0
   private final val Year4 = 1
   private final val Year2 = 2

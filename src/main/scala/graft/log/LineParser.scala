@@ -83,7 +83,8 @@ final class LineParser(
     opts.failFast || opts.dropMalformed || filters.nonEmpty
 
   private val linePattern = new LinePattern(opts.pattern, opts.regexMaxSteps,
-    opts.regexBudgetExplicit, s"'${opts.pattern}'")
+    opts.regexBudgetExplicit, opts.absorbedDesc.getOrElse(s"'${opts.pattern}'"),
+    dotSpan = opts.absorbedDesc.isDefined)
   // single-threaded, like every scratch buffer of the parser
   @transient private lazy val matcher = linePattern.matcher()
   @transient private lazy val dateFmt: DateTimeFormatter =
@@ -141,23 +142,20 @@ final class LineParser(
       var i = 0
       while (i < slots.length) {
         val sl = slots(i)
-        try {
-          // Divergence (SURVEY.md §7.4): unparticipating optional group →
-          // NULL, not "" (reference: LRR:234-236 coerces to "" which
-          // crashes numeric parsing fatally even in tolerant mode). NULL
-          // is not malformed.
-          val v = value(sl)
-          if (v != null) {
-            if (sl.ord >= 0) row.update(sl.ord, v)
-            if (sl.fslot >= 0) fvals(sl.fslot) = v
-          }
-        } catch {
-          case e: Exception if opts.failFast =>
-            throw new SparkException(
-              s"[log] FAILFAST: cannot convert '${matcher.groupText(sl.group)}' to ${sl.dt} " +
-                s"in line: ${matcher.lineText()}", e)
-          case _: Exception if opts.dropMalformed => nDropped += 1; return null
-          case _: Exception => () // tolerant: NULL, LRR:249-255 semantics
+        // Divergence (SURVEY.md §7.4): unparticipating optional group →
+        // NULL, not "" (reference: LRR:234-236 coerces to "" which crashes
+        // numeric parsing fatally even in tolerant mode). NULL is not
+        // malformed.
+        val v =
+          try value(sl)
+          catch { case e: Exception => if (opts.failFast) throw fatal(sl, e) else Malformed }
+        if (v.asInstanceOf[AnyRef] eq Malformed) {
+          if (opts.failFast) throw fatal(sl, jdkError(matcher.groupText(sl.group), sl.kind))
+          if (opts.dropMalformed) { nDropped += 1; return null }
+          // tolerant: NULL, LRR:249-255 semantics
+        } else if (v != null) {
+          if (sl.ord >= 0) row.update(sl.ord, v)
+          if (sl.fslot >= 0) fvals(sl.fslot) = v
         }
         i += 1
       }
@@ -184,7 +182,28 @@ final class LineParser(
     row
   }
 
-  /** The slot's converted value; null for an unparticipating group.
+  /** FAILFAST's error for slot `sl`, caused by `cause`. */
+  private def fatal(sl: Slot, cause: Exception): SparkException =
+    new SparkException(
+      s"[log] FAILFAST: cannot convert '${matcher.groupText(sl.group)}' to ${sl.dt} " +
+        s"in line: ${matcher.lineText()}", cause)
+
+  /** The exception the JDK conversion (or [[FastDateTime]]'s error) raises
+    * for a value [[convert]] found malformed: FAILFAST's cause, made once,
+    * on the fatal path only. */
+  private def jdkError(raw: String, kind: Int): Exception =
+    try {
+      (kind: @switch) match {
+        case KInt => java.lang.Integer.valueOf(raw)
+        case KDouble => java.lang.Double.valueOf(raw)
+        case KFloat => java.lang.Float.valueOf(raw)
+        case _ => throw FastDateTime.error(raw)
+      }
+      new IllegalStateException(s"'$raw' was rejected but converts") // unreachable
+    } catch { case e: Exception => e }
+
+  /** The slot's converted value; null for an unparticipating group,
+    * [[LineParser.Malformed]] for a value that does not convert.
     * VARCHAR keeps the group's UTF-8 (LRR:276-281, no 4 KB limit). */
   private def value(sl: Slot): Any =
     if (sl.kind == KVarchar) matcher.groupUtf8(sl.group)
@@ -193,17 +212,27 @@ final class LineParser(
       if (r == null) null else convert(r, sl.kind)
     }
 
-  /** String → Spark internal value for one typed capture group (SURVEY.md §1.3). */
+  /** String → Spark internal value for one typed capture group (SURVEY.md
+    * §1.3), or [[LineParser.Malformed]]. The common malformed values (an
+    * Apache `-` size) are rejected without an exception; only the
+    * `DateTimeFormatter` fallback and the rare malformed value the JDK
+    * parsers must see still throw. */
   private def convert(raw: String, kind: Int): Any = (kind: @switch) match {
-    case KInt => java.lang.Integer.valueOf(raw) // LRR:238-239
-    case KDouble => java.lang.Double.valueOf(raw) // LRR:240-241
-    case KFloat => java.lang.Float.valueOf(raw) // LRR:242-243
+    case KInt => parseInt(raw) // LRR:238-239
+    case KDouble => // LRR:240-241
+      if (noNumber(raw)) Malformed else java.lang.Double.valueOf(raw)
+    case KFloat => // LRR:242-243
+      if (noNumber(raw)) Malformed else java.lang.Float.valueOf(raw)
     case KDate => // LRR:244-255; UTC pinned (reference: JVM-default tz)
-      if (fastDate != null) java.lang.Integer.valueOf(fastDate.parseEpochDay(raw))
-      else java.lang.Integer.valueOf(LocalDate.from(dateFmt.parse(raw)).toEpochDay.toInt)
+      if (fastDate != null) {
+        val d = fastDate.parseEpochDay(raw)
+        if (d == FastDateTime.Invalid) Malformed else java.lang.Integer.valueOf(d)
+      } else java.lang.Integer.valueOf(LocalDate.from(dateFmt.parse(raw)).toEpochDay.toInt)
     case KTimestamp => // LRR:256-267 — same formatter as DATE (no separate timestamp format)
-      if (fastDate != null) java.lang.Long.valueOf(fastDate.parseMicros(raw))
-      else {
+      if (fastDate != null) {
+        val us = fastDate.parseMicros(raw)
+        if (us == FastDateTime.InvalidMicros) Malformed else java.lang.Long.valueOf(us)
+      } else {
         val ta = dateFmt.parse(raw)
         val d = ta.query(TemporalQueries.localDate)
         if (d == null) throw new IllegalArgumentException(s"no date fields in '$raw'")
@@ -212,8 +241,10 @@ final class LineParser(
         java.lang.Long.valueOf(inst.getEpochSecond * 1000000L + inst.getNano / 1000)
       }
     case KTime => // LRR:268-275: millis-of-day; honors timeFormat (reference bug LRR:324 not replicated)
-      if (fastTime != null) java.lang.Integer.valueOf(fastTime.parseMillisOfDay(raw))
-      else {
+      if (fastTime != null) {
+        val ms = fastTime.parseMillisOfDay(raw)
+        if (ms == FastDateTime.Invalid) Malformed else java.lang.Integer.valueOf(ms)
+      } else {
         val t = LocalTime.from(timeFmt.parse(raw))
         java.lang.Integer.valueOf(t.toSecondOfDay * 1000 + t.getNano / 1000000)
       }
@@ -221,6 +252,57 @@ final class LineParser(
 }
 
 object LineParser {
+
+  /** A typed value that does not convert (never a row value). */
+  private[log] object Malformed
+
+  /** `Integer.valueOf(s)`, or [[Malformed]] where it would throw. ASCII
+    * input is parsed here by `Integer.parseInt`'s rules (an optional sign,
+    * then at least one digit, no whitespace, overflow rejected); other
+    * input keeps `Integer.valueOf`, which also reads non-ASCII digits. */
+  private[log] def parseInt(s: String): Any = {
+    val len = s.length
+    if (len == 0) return Malformed
+    val first = s.charAt(0)
+    val negative = first == '-'
+    var i = if (negative || first == '+') 1 else 0
+    if (i == len) return Malformed
+    // accumulate negatively, as parseInt does: MIN_VALUE has no positive twin
+    val limit = if (negative) Int.MinValue else -Int.MaxValue
+    val multmin = limit / 10
+    var acc = 0
+    while (i < len) {
+      val c = s.charAt(i)
+      if (c >= 0x80) {
+        return try java.lang.Integer.valueOf(s)
+          catch { case _: NumberFormatException => Malformed }
+      }
+      if (c < '0' || c > '9') return Malformed
+      val d = c - '0'
+      if (acc < multmin) return Malformed
+      acc *= 10
+      if (acc < limit + d) return Malformed
+      acc -= d
+      i += 1
+    }
+    java.lang.Integer.valueOf(if (negative) acc else -acc)
+  }
+
+  /** True for an ASCII string that `Double.valueOf` / `Float.valueOf`
+    * reject for certain: one without a digit `0`-`9` that is not, after
+    * Java's trim, an optionally signed `NaN` or `Infinity`. False sends
+    * the string to the JDK parser. */
+  private[log] def noNumber(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c >= 0x80 || (c >= '0' && c <= '9')) return false
+      i += 1
+    }
+    val t = s.trim
+    val u = if (t.startsWith("+") || t.startsWith("-")) t.substring(1) else t
+    u != "NaN" && u != "Infinity"
+  }
 
   // conversion kinds, fixed once per slot from the declared type name
   private final val KVarchar = 0

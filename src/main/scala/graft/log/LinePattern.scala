@@ -20,14 +20,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *     the `regexMaxSteps` budget when one is engaged
   *     ([[LinePattern.effectiveBudget]]).
   *
-  * `desc` names the pattern in a budget error. Immutable and serializable;
-  * the matching state is [[matcher]]'s, one per thread.
+  * `desc` names the pattern in a budget error. With `dotSpan`, a line is
+  * matched only inside the span the default pattern `(.*)` would capture
+  * from it: up to its first U+0085, U+2028 or U+2029, the line terminators
+  * `.` stops at on a framed line ([[AbsorbParseLogLine]]'s reads). ASCII
+  * lines hold none of them. Immutable and serializable; the matching state
+  * is [[matcher]]'s, one per thread.
   */
 private[graft] final class LinePattern(
     pattern: String,
     maxSteps: Long,
     explicit: Boolean,
-    private val desc: String) extends Serializable {
+    private val desc: String,
+    private val dotSpan: Boolean = false) extends Serializable {
   import LinePattern._
 
   private val compiled = Pattern.compile(pattern)
@@ -88,9 +93,11 @@ private[graft] object LinePattern {
 
     private def findRegex(line: String): Boolean = {
       viaKernel = false; text = line
+      // the literal reject is a necessary condition on the span as well
       val mightMatch = p.litText == null ||
         (if (p.litAnchored) line.startsWith(p.litText) else line.contains(p.litText))
-      mightMatch && findBudgeted(m, budgeted, line, p.budget, p.desc)
+      mightMatch && findBudgeted(m, budgeted, line, p.budget, p.desc,
+        if (p.dotSpan) dotSpanEnd(line) else line.length)
     }
 
     /** Group `g` as its own `UTF8String`. A kernel group always
@@ -111,6 +118,18 @@ private[graft] object LinePattern {
 
     def lineText(): String =
       if (viaKernel) new String(kb, kOff, kLen, ISO_8859_1) else text
+  }
+
+  /** Where `(.*)`'s capture of a framed `line` ends: its first U+0085,
+    * U+2028 or U+2029 (framing leaves no `\n` or `\r` in it). */
+  private def dotSpanEnd(line: String): Int = {
+    var i = 0
+    while (i < line.length) {
+      val c = line.charAt(i)
+      if (c == '\u0085' || c == '\u2028' || c == '\u2029') return i
+      i += 1
+    }
+    i
   }
 
   /** A `UTF8String` of its own copy of `b[off, off + len)` (`fromBytes`
@@ -591,29 +610,40 @@ private[graft] object LinePattern {
     * zero overhead). Throws a FAILFAST-style SparkException with the
     * pattern and line context; the partition reader appends the file path
     * like every other scan error.
+    *
+    * A `spanEnd` before the line's end matches `line[0, spanEnd)` alone,
+    * through `Matcher.region` with its default anchoring and opaque bounds
+    * — as the substring would match, budget and message included.
     */
   private[graft] def findBudgeted(
       m: java.util.regex.Matcher,
       buf: BudgetedChars,
       line: String,
       maxSteps: Long,
-      patternDesc: String): Boolean = {
-    if (maxSteps <= 0L) { m.reset(line); return m.find() }
+      patternDesc: String,
+      spanEnd: Int = Int.MaxValue): Boolean = {
+    val end = math.min(spanEnd, line.length)
+    if (maxSteps <= 0L) {
+      m.reset(line)
+      if (end < line.length) m.region(0, end)
+      return m.find()
+    }
     // saturating add: an explicit huge regexMaxSteps ("effectively
     // unlimited but keep the wrapper") must not wrap negative and fail
     // every line on its first read
-    val headroom = 100L * line.length
+    val headroom = 100L * end
     val budget = if (maxSteps > Long.MaxValue - headroom) Long.MaxValue
       else maxSteps + headroom
     buf.reset(line, budget)
     m.reset(buf)
+    if (end < line.length) m.region(0, end)
     try m.find()
     catch {
       case _: RegexBudgetExceeded =>
         throw new SparkException(
           s"[log] regex step budget exhausted (regexMaxSteps=$maxSteps): pattern " +
-            s"$patternDesc is backtracking catastrophically on a ${line.length}-char " +
-            s"line beginning '${line.take(80)}'; rewrite the pattern (possessive " +
+            s"$patternDesc is backtracking catastrophically on a $end-char " +
+            s"line beginning '${line.substring(0, math.min(80, end))}'; rewrite the pattern (possessive " +
             "quantifiers / atomic groups) or raise the regexMaxSteps option (0 disables)")
     }
   }

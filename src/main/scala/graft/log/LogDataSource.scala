@@ -71,7 +71,10 @@ object LogDataSource {
   }
 }
 
-final class LogTable(tableSchema: StructType, opts: LogOptions, paths: Seq[String])
+final class LogTable(
+    tableSchema: StructType,
+    private[log] val opts: LogOptions,
+    private[log] val paths: Seq[String])
     extends Table with SupportsRead {
   override def name(): String = s"log(${paths.mkString(",")})"
   override def schema(): StructType = tableSchema

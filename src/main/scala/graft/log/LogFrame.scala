@@ -27,8 +27,12 @@ case class ParseLogLine(child: Expression, pattern: String) extends UnaryExpress
   // `spark.graft.log.regexMaxSteps`, captured at analysis time (0
   // disables) — the expression has no per-call options surface. Built
   // with the expression, so a bad pattern or budget fails at analysis.
-  private val linePattern = new LinePattern(pattern, ParseLogLine.sessionMaxSteps,
-    explicit = false, s"'$pattern' (parse_log_line; override via SET spark.graft.log.regexMaxSteps)")
+  // AbsorbParseLogLine hands the budget and the error text to the scan.
+  private[log] val maxSteps: Long = ParseLogLine.sessionMaxSteps
+  private[log] val desc: String =
+    s"'$pattern' (parse_log_line; override via SET spark.graft.log.regexMaxSteps)"
+  private val linePattern = new LinePattern(pattern, maxSteps, explicit = false, desc)
+  private[log] def groupCount: Int = linePattern.groupCount
   // each task deserializes its own copy of the expression, so the
   // matching state is per task (as Spark's RegExpExtract keeps its own)
   @transient private lazy val matcher = linePattern.matcher()

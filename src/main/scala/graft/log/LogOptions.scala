@@ -115,7 +115,13 @@ final case class LogOptions(
     // explicitly engages it for any pattern.
     regexMaxSteps: Long = LogOptions.DefaultRegexMaxSteps,
     // true when regexMaxSteps was given explicitly (engage unconditionally)
-    regexBudgetExplicit: Boolean = false) {
+    regexBudgetExplicit: Boolean = false,
+    // not an option: set only by AbsorbParseLogLine, when this read stands
+    // for `parse_log_line(line, pattern)` over a default `(.*)` read. The
+    // pattern then matches only inside the span `(.*)` would have captured
+    // (LinePattern's dotSpan), and a budget error names it by this text,
+    // as parse_log_line's own error does
+    absorbedDesc: Option[String] = None) {
 
   /** Spark type per declared field (SURVEY.md §1.3 mapping; TIME is
     * represented as IntegerType millis-of-day — FINAL, SURVEY §7.4#1:

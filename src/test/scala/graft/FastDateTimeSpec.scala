@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Differential equivalence of the compiled numeric date/time fast path
   * against the DateTimeFormatter reference semantics it replaces
   * (LineParser's DATE/TIMESTAMP/TIME conversions): for every (pattern,
-  * input) pair, either both succeed with the same value or both throw —
+  * input) pair, either both succeed with the same value or both reject
+  * (the formatter throws, the fast path returns its failure value) —
   * including the formatter's SMART quirks (day-of-month clamping,
   * Apr 31 → Apr 30; reduced `yy` base 2000; inferred-zero time fields;
   * rejected year-of-era 0000).
@@ -33,6 +34,13 @@ class FastDateTimeSpec extends AnyFunSuite {
     t.toSecondOfDay * 1000 + t.getNano / 1000000
   }
 
+  // the fast path's failure value as an exception, so that both sides
+  // reject alike below
+  private def valid(v: Int): Int =
+    if (v == FastDateTime.Invalid) throw new IllegalArgumentException("invalid") else v
+  private def valid(v: Long): Long =
+    if (v == FastDateTime.InvalidMicros) throw new IllegalArgumentException("invalid") else v
+
   private def agree[A](fast: => A, ref: => A, ctx: String): Unit = {
     val f = try Right(fast) catch { case e: Exception => Left(e.getClass.getSimpleName) }
     val r = try Right(ref) catch { case e: Exception => Left(e.getClass.getSimpleName) }
@@ -49,9 +57,9 @@ class FastDateTimeSpec extends AnyFunSuite {
     val fast = fastOpt.get
     val fmt = DateTimeFormatter.ofPattern(pattern, Locale.US)
     inputs.foreach { s =>
-      agree(fast.parseEpochDay(s), refEpochDay(fmt, s), s"DATE '$pattern' <- '$s'")
-      agree(fast.parseMicros(s), refMicros(fmt, s), s"TIMESTAMP '$pattern' <- '$s'")
-      agree(fast.parseMillisOfDay(s), refMillisOfDay(fmt, s), s"TIME '$pattern' <- '$s'")
+      agree(valid(fast.parseEpochDay(s)), refEpochDay(fmt, s), s"DATE '$pattern' <- '$s'")
+      agree(valid(fast.parseMicros(s)), refMicros(fmt, s), s"TIMESTAMP '$pattern' <- '$s'")
+      agree(valid(fast.parseMillisOfDay(s)), refMillisOfDay(fmt, s), s"TIME '$pattern' <- '$s'")
     }
   }
 
@@ -121,7 +129,7 @@ class FastDateTimeSpec extends AnyFunSuite {
     while (d.getYear == 2024) {
       val t = LocalTime.of(i % 24, (i * 7) % 60, (i * 13) % 60)
       val s = LocalDateTime.of(d, t).format(fmt)
-      assert(fast.parseMicros(s) == refMicros(fmt, s), s)
+      assert(valid(fast.parseMicros(s)) == refMicros(fmt, s), s)
       d = d.plusDays(1)
       i += 1
     }
@@ -145,8 +153,8 @@ class FastDateTimeSpec extends AnyFunSuite {
       LocalDate.of(12345, 1, 1).toEpochDay.toInt)
     // fast path: fixed width — throws, so the line error-routes (the
     // deviation FastDateTime's scaladoc documents)
-    intercept[Exception](fast.parseEpochDay("+12345-01-01"))
-    intercept[Exception](fast.parseMicros("+12345-01-01"))
+    assert(fast.parseEpochDay("+12345-01-01") == FastDateTime.Invalid)
+    assert(fast.parseMicros("+12345-01-01") == FastDateTime.InvalidMicros)
   }
 
   // ---------------------------------------------------------------- fuzz
@@ -249,9 +257,9 @@ class FastDateTimeSpec extends AnyFunSuite {
         f == r || (f.isEmpty && p.contains("yyyy") &&
           (head.contains('+') || maxRun(head, _.isDigit) > 4))
       }
-      agreeOn(fast.parseEpochDay(s), refEpochDay(fmt, s)) &&
-        agreeOn(fast.parseMicros(s), refMicros(fmt, s)) &&
-        agreeOn(fast.parseMillisOfDay(s), refMillisOfDay(fmt, s))
+      agreeOn(valid(fast.parseEpochDay(s)), refEpochDay(fmt, s)) &&
+        agreeOn(valid(fast.parseMicros(s)), refMicros(fmt, s)) &&
+        agreeOn(valid(fast.parseMillisOfDay(s)), refMillisOfDay(fmt, s))
     }
     val params = org.scalacheck.Test.Parameters.default
       .withMinSuccessfulTests(4000)
@@ -282,9 +290,9 @@ class FastDateTimeSpec extends AnyFunSuite {
         if (allowedDivergence) Left(()) else Right((f, r))
       }
       Seq(
-        sides(fast.parseEpochDay(s), refEpochDay(fmt, s)),
-        sides(fast.parseMicros(s), refMicros(fmt, s)),
-        sides(fast.parseMillisOfDay(s), refMillisOfDay(fmt, s))
+        sides(valid(fast.parseEpochDay(s)), refEpochDay(fmt, s)),
+        sides(valid(fast.parseMicros(s)), refMicros(fmt, s)),
+        sides(valid(fast.parseMillisOfDay(s)), refMillisOfDay(fmt, s))
       ).forall {
         case Left(())      => true
         case Right((f, r)) => f == r // same value, or both rejected (None)

@@ -258,6 +258,31 @@ class LogSourceSpec extends SparkSpec {
     intercept[Exception](df.collect())
   }
 
+  test("FAILFAST names the value, type and line; the cause is the parser's own error") {
+    val dir = java.nio.file.Files.createTempDirectory("failfast").toFile
+    java.nio.file.Files.write(new java.io.File(dir, "a.log").toPath,
+      java.util.Arrays.asList("7 2024-01-01", "- 2024-01-02", "8 2024-13-01"))
+    def failure(schema: String, pattern: String): Throwable = {
+      val df = spark.read.format("log").option("pattern", pattern).option("schema", schema)
+        .option("dateFormat", "yyyy-MM-dd").option("mode", "FAILFAST").load(dir.getAbsolutePath)
+      val e = intercept[Exception](df.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .find(t => Option(t.getMessage).exists(_.startsWith("[log] FAILFAST")))
+        .getOrElse(fail(s"no FAILFAST error in $e"))
+    }
+    val int = failure("n INT, d VARCHAR", "^(\\S+) (\\S+)$")
+    assert(int.getMessage.startsWith("[log] FAILFAST: cannot convert '-' to INT in line: - 2024-01-02 (file="),
+      int.getMessage)
+    assert(int.getCause.isInstanceOf[NumberFormatException] &&
+      int.getCause.getMessage == "For input string: \"-\"", int.getCause)
+    // a DATE on the fast path reports FastDateTime's error
+    val date = failure("n VARCHAR, d DATE", "^(\\S+) (\\S+)$")
+    assert(date.getMessage.startsWith(
+      "[log] FAILFAST: cannot convert '2024-13-01' to DATE in line: 8 2024-13-01 (file="), date.getMessage)
+    assert(date.getCause.isInstanceOf[IllegalArgumentException] &&
+      date.getCause.getMessage == "cannot parse '2024-13-01'", date.getCause)
+  }
+
   test("DROPMALFORMED: unmatched and unconvertible lines are dropped, not routed") {
     // mixed.log: 2 matching lines + 1 garbage line
     val dropped = spark.read.format("log")
